@@ -6,7 +6,7 @@ Exists so Arrow-vectorized operators can fold "hash each n-gram with
 xxhash64" into the same Python pass that produces the n-grams, instead of
 exploding every gram back into the JVM just to apply the hash expression
 (one exchange + a wide aggregation per consumer). The JVM expression stays
-the reference: ``tests/test_round6_xxh64.py`` pins bitwise equality on
+the reference: ``tests/test_round6_band_arrow.py`` pins bitwise equality on
 adversarial inputs and on every shingle of the driver corpus.
 
 Spark reference: org.apache.spark.sql.catalyst.expressions.XxHash64 /
@@ -108,9 +108,10 @@ def _nrotl(x: "np.ndarray", r: int) -> "np.ndarray":
 def _xxh64_fixed_len(buf: "np.ndarray", L: int, seed: int) -> "np.ndarray":
     """XXH64 of k same-length byte strings: ``buf`` is (k, Lpad) uint8 with
     Lpad a multiple of 8 and bytes beyond L zero (never read — the spec's
-    reads at 8/4/1-byte granularity stay inside L)."""
-    w64 = buf.view(np.uint64)
-    w32 = buf.view(np.uint32)
+    reads at 8/4/1-byte granularity stay inside L). Words are read
+    little-endian as the spec requires, whatever the host byte order."""
+    w64 = buf.view(np.dtype("<u8"))
+    w32 = buf.view(np.dtype("<u4"))
     k = buf.shape[0]
     i = 0
     if L >= 32:

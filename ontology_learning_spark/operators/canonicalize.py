@@ -296,28 +296,11 @@ def canonical_mapping(alias_edges: DataFrame, small_threshold: int = SMALL_ALIAS
     # limit(k+1)+collect instead of count()+collect(): one job decides
     # the branch AND fetches the edges when small.
     probe = alias_edges.limit(small_threshold + 1).collect()
-    return canonical_mapping_probed(
-        alias_edges.sparkSession, probe, lambda: alias_edges, small_threshold
-    )
-
-
-def canonical_mapping_probed(
-    spark,
-    probe_rows: list,
-    alias_edges_fn,
-    small_threshold: int = SMALL_ALIAS_THRESHOLD,
-) -> DataFrame:
-    """``canonical_mapping`` when the caller already holds a
-    ``limit(small_threshold+1).collect()`` probe of the (self-edge-free)
-    alias edges — the pipeline overlaps that probe with the decision
-    checkpoint so its job leaves the serial tail. Falls back to the
-    distributed loop (via ``alias_edges_fn()``) when the probe
-    overflows the threshold."""
-    if len(probe_rows) <= small_threshold:
+    if len(probe) <= small_threshold:
         from ..oracle.reference import canonicalize_aliases
 
-        pairs = [(r["surface"], r["alias_of"]) for r in probe_rows]
-        mapping = canonicalize_aliases(pairs)
+        spark = alias_edges.sparkSession
+        mapping = canonicalize_aliases([(r["surface"], r["alias_of"]) for r in probe])
         if not mapping:
             return spark.createDataFrame([], "surface string, canonical string")
         # pandas + Arrow, not a plain Python list: local-list
@@ -331,7 +314,6 @@ def canonical_mapping_probed(
             schema="surface string, canonical string",
         )
 
-    alias_edges = alias_edges_fn().where(F.col("surface") != F.col("alias_of"))
     edges = alias_edges.select(
         F.col("surface").alias("src"), F.col("alias_of").alias("dst")
     )

@@ -62,8 +62,9 @@ def decide(best: DataFrame, thresholds: dict | None = None,
 
     # Same null guard as the decision cascade: a row with a score but a
     # null best_match must take the no-match branch in BOTH expressions
-    # (unreachable via best_matches today, but direct callers could
-    # otherwise get decision=EXTEND with a score-derived confidence).
+    # (unreachable via best_offers_with_category today, but direct
+    # callers could otherwise get decision=EXTEND with a score-derived
+    # confidence).
     confidence = (
         F.when(score.isNull() | F.col("best_match").isNull(), F.lit(0.9))
         .when(score >= 0.999, score)

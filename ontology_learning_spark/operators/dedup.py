@@ -85,28 +85,25 @@ import re as _re
 _JAVA_WS = _re.compile("[ \t\n\x0b\f\r]+")
 
 
+def _word_grams(text: str | None, n: int) -> list[str]:
+    """Distinct word n-grams of one document in first-occurrence order
+    (dict.fromkeys ≡ array_distinct) — the one Python tokenizer behind
+    every Arrow shingle pass; empty when the text has fewer than n
+    tokens."""
+    toks = _JAVA_WS.split((text or "").strip(" ").lower())
+    return list(dict.fromkeys(" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)))
+
+
 def _shingle_udf(n: int):
     """Vectorized word-shingler: one Python loop per Arrow batch, no
     interpreted JVM higher-order functions (guide §4.1/§4.2 — the
     Catalyst zip/transform/distinct chain evaluates per-element in
     interpreted mode and allocates a struct row per shingle; measured
-    ~30x slower than this form at 50k docs). dict.fromkeys preserves
-    first-occurrence order — exactly array_distinct's semantics."""
+    ~30x slower than this form at 50k docs)."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def udf(texts: pd.Series) -> pd.Series:
-        out = []
-        append = out.append
-        split = _JAVA_WS.split
-        for t in texts:
-            toks = split((t or "").strip(" ").lower())
-            if len(toks) < n:
-                append([])
-            else:
-                append(list(dict.fromkeys(
-                    " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)
-                )))
-        return pd.Series(out)
+        return pd.Series([_word_grams(t, n) for t in texts])
 
     return udf
 
@@ -141,8 +138,6 @@ def exploded_shingles(df: DataFrame, text_col: str = "text",
     the array form stays for candidate-verify set ops."""
     import pyarrow as pa
 
-    ws_split = _JAVA_WS.split
-
     def _run(batches):
         for b in batches:
             id_type = b.column(0).type
@@ -153,12 +148,7 @@ def exploded_shingles(df: DataFrame, text_col: str = "text",
             extend_id = out_id.extend
             extend_g = out_g.extend
             for i, txt in zip(ids, texts):
-                toks = ws_split((txt or "").strip(" ").lower())
-                if len(toks) < n:
-                    continue
-                gs = dict.fromkeys(
-                    " ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)
-                )
+                gs = _word_grams(txt, n)
                 extend_g(gs)
                 extend_id([i] * len(gs))
             yield pa.RecordBatch.from_arrays(
@@ -185,8 +175,6 @@ def exploded_gram_hashes(df: DataFrame, text_col: str = "text",
 
     from ..functions.xxh64 import xxh64_many
 
-    ws_split = _JAVA_WS.split
-
     def _run(batches):
         for b in batches:
             id_type = b.column(0).type
@@ -197,12 +185,7 @@ def exploded_gram_hashes(df: DataFrame, text_col: str = "text",
             extend_id = out_id.extend
             extend_g = gram_bytes.extend
             for i, txt in zip(ids, texts):
-                toks = ws_split((txt or "").strip(" ").lower())
-                if len(toks) < n:
-                    continue
-                gs = dict.fromkeys(
-                    " ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)
-                )
+                gs = _word_grams(txt, n)
                 extend_g(g.encode("utf-8") for g in gs)
                 extend_id([i] * len(gs))
             yield pa.RecordBatch.from_arrays(
@@ -228,19 +211,6 @@ def _hash_params(num_hashes: int) -> list[tuple[int, int]]:
 
     rng = random.Random(1234)
     return [(rng.randrange(1, _MERSENNE_P), rng.randrange(0, _MERSENNE_P)) for _ in range(num_hashes)]
-
-
-def minhash_signature(shingles_col, num_hashes: int = 32):
-    """MinHash signature as an array column (narrow path, kept for
-    composability; the candidates pipeline below uses the faster
-    explode+groupBy variant)."""
-    base = F.transform(shingles_col, lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 31)))
-    return F.array(
-        *[
-            F.array_min(F.transform(base, lambda h, a=a, b=b: (h * a + b) % _MERSENNE_P))
-            for a, b in _hash_params(num_hashes)
-        ]
-    )
 
 
 def minhash_plan(threshold: float, target_recall: float = 0.99,
@@ -405,7 +375,6 @@ def minhash_band_table(
     a_vec = np.array([a for a, _ in params], dtype=np.int64)
     b_vec = np.array([b for _, b in params], dtype=np.int64)
     n = shingle_n
-    ws_split = _JAVA_WS.split
     p31 = np.int64(1 << 31)
     mersenne = np.int64(_MERSENNE_P)
 
@@ -422,12 +391,9 @@ def minhash_band_table(
             gram_bytes: list = []
             offsets = [0]
             for i, txt in zip(ids, texts):
-                toks = ws_split((txt or "").strip(" ").lower())
-                if len(toks) < n:
+                gs = _word_grams(txt, n)
+                if not gs:
                     continue
-                gs = dict.fromkeys(
-                    " ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)
-                )
                 doc_ids.append(i)
                 gram_bytes.extend(g.encode("utf-8") for g in gs)
                 offsets.append(len(gram_bytes))

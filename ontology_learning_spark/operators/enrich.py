@@ -31,10 +31,11 @@ def top_docs_per_concept(
     local top-n per concept before anything is shuffled. A head
     concept's group never materializes: the reduce side sees at most
     n·num_map_partitions rows per concept regardless of how many
-    billions of raw mentions it has. Measured (jobs/bench_skew.py,
-    320k docs): the stage wall is FLAT (3.3 → 2.6 s) while the planted
-    hot group grows 4.8M → 16.5M rows. The surviving dense rank IS the
-    distinct-doc row number, so the post-filter dedup is exact.
+    billions of raw mentions it has. Measured (BENCH/BASELINE.md "Skew
+    at scale", 320k docs): the stage wall is FLAT (3.3 → 2.6 s) while
+    the planted hot group grows 4.8M → 16.5M rows. The surviving dense
+    rank IS the distinct-doc row number, so the post-filter dedup is
+    exact.
 
     ``salted=True`` keeps the round-3 hand-salted two-phase plan
     (phase 1 ranks within (concept, salt-of-32) buckets, phase 2 ranks

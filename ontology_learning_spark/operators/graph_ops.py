@@ -20,7 +20,7 @@ src/curation/graph_cleaner.py:25-77.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SUBCLASS = "SUBCLASS_OF"
@@ -84,39 +84,10 @@ def descendants(edges: DataFrame, root: str, rel_type: str | None = SUBCLASS,
     e = edges
     if rel_type is not None:
         e = e.where(F.col("rel_type") == rel_type)
-    e = e.select("src", "dst")
-    probe = e.limit(_DRIVER_BFS_MAX_EDGES + 1).collect()
-    if len(probe) <= _DRIVER_BFS_MAX_EDGES:
-        # descendants follow edges upward: reverse (src→dst) to dst→src
-        return _driver_bfs(
-            edges.sparkSession, [(r["dst"], r["src"]) for r in probe], root, max_depth
-        )
-    e = e.localCheckpoint()
-
-    frontier = (
-        e.where(F.col("dst") == root)
-        .select(F.col("src").alias("name"))
-        .distinct()
-        .withColumn("depth", F.lit(1))
-        .localCheckpoint()
+    # descendants follow edges upward: the closure over dst→src
+    return _closure_from(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), root, max_depth
     )
-    seen = frontier
-    depth = 1
-    while depth < max_depth:
-        nxt = (
-            e.join(frontier.select(F.col("name").alias("dst")), "dst")
-            .select(F.col("src").alias("name"))
-            .distinct()
-            .join(seen.select("name"), "name", "left_anti")
-            .withColumn("depth", F.lit(depth + 1))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-        depth += 1
-    return seen
 
 
 def ancestors(edges: DataFrame, leaf: str, rel_type: str | None = SUBCLASS,

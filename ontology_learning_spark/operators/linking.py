@@ -32,8 +32,6 @@ confidence x0.7 :357-362); catalog load :90-141.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -169,7 +167,7 @@ def embedding_matches(concepts: DataFrame, catalog: DataFrame, low: float) -> Da
     # Per-concept cap inside the band: hashed embeddings are weakly
     # selective (most concept x catalog pairs clear the low bar —
     # measured 3.9M offer rows at 46k concepts), but only a band's own
-    # top-10 by (score desc, candidate asc) can ever reach find_matches'
+    # top-10 by (score desc, candidate asc) can ever reach rank_matches'
     # global top-10: every kept offer outranks every dropped one under
     # the same tie-break, so the cap is output-invariant and the M6
     # shuffle sees 10 rows per concept instead of |catalog|.
@@ -540,36 +538,3 @@ def best_offers_with_category(all_matches: DataFrame, catalog: DataFrame) -> Dat
                        F.col("category").alias("best_category"))
     )
     return best_offers(all_matches).join(cat, "best_match", "left")
-
-
-def find_matches(concepts: DataFrame, catalog: DataFrame,
-                 thresholds: dict | None = None,
-                 prepped: bool = False,
-                 props: DataFrame | None = None) -> DataFrame:
-    """M1: union all methods → M6 best-per-(concept,candidate) → top-10
-    per concept. Returns ranked matches with rank column.
-
-    ``prepped=True`` means ``concepts`` already went through
-    ``prepare_concepts`` (category/embedding/block_keys present).
-    ``props`` (concept + tech-spec columns) enables the M4 band.
-    """
-    prepped_df = concepts if prepped else prepare_concepts(concepts)
-    all_matches = base_match_offers(prepped_df, catalog, thresholds)
-    if props is not None:
-        all_matches = all_matches.unionByName(technical_matches(props, catalog))
-    return rank_matches(all_matches)
-
-
-def best_matches(matches: DataFrame, catalog: DataFrame) -> DataFrame:
-    """rank==1 row per concept, joined with candidate category for the
-    decision cascade."""
-    cat = F.broadcast(
-        catalog.select(F.col("name").alias("candidate"), F.col("category").alias("best_category"))
-    )
-    return (
-        matches.where(F.col("rank") == 1)
-        .select("concept", F.col("candidate").alias("best_match"),
-                F.col("score").alias("best_score"), "match_type")
-        .join(cat, F.col("best_match") == F.col("candidate"), "left")
-        .drop("candidate")
-    )

@@ -32,7 +32,7 @@ linking/decision job then reads three pinned, vocabulary-sized inputs.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,7 +46,6 @@ from ..operators import decisions as D
 from ..operators import enrich as EN
 from ..operators import extraction as E
 from ..operators import linking as L
-from ..sources import tables as TBL
 
 
 @dataclass
@@ -58,7 +57,6 @@ class PipelineResult:
     tasks: DataFrame
     mappings: DataFrame
     triples: DataFrame
-    extras: dict = field(default_factory=dict)
 
 
 def run_pipeline(
@@ -68,20 +66,11 @@ def run_pipeline(
     thresholds: dict | None = None,
     extra_surfaces: tuple[str, ...] = (),
     catalog_df: DataFrame | None = None,
-    timing_sink: dict | None = None,
 ) -> PipelineResult:
     """``extra_surfaces`` widens the extraction gazetteer beyond the
     link catalog (mentions of unknown-to-the-catalog terms are what
     drive EXTEND decisions). ``catalog_df`` lets repeated runs reuse an
-    already-prepared (cached/broadcast-warm) catalog. ``timing_sink``
-    (a dict) receives per-phase wall seconds keyed extract/leg_*/decide
-    — the attribution the bench uses to separate plan cost from
-    JIT/host noise."""
-    import time as _time
-
-    _t0 = _time.time()
-    _mark = (lambda k: timing_sink.__setitem__(k, round(_time.time() - _t0, 3))) \
-        if timing_sink is not None else (lambda k: None)
+    already-prepared (cached/broadcast-warm) catalog."""
     catalog_rows = catalog_rows if catalog_rows is not None else baseline.entity_catalog()
     th = thresholds or S.DEFAULT_THRESHOLDS
     surfaces = tuple(sorted(
@@ -100,7 +89,6 @@ def run_pipeline(
     # parallelism (memory-bandwidth-bound, unlike the Python
     # extraction pass which scales near-perfectly).
     mentions = materialize(mentions_raw, corpus_scale=True)
-    _mark("extract_done")
 
     # The concept DIMENSION is |vocabulary|-sized, orders of magnitude
     # below the corpus: give its stages (embed UDF, blocked joins,
@@ -138,7 +126,6 @@ def run_pipeline(
         # The four bands that need only prepped (M2/M3/M5) score here,
         # overlapped with the context→props leg that feeds M4.
         offers = materialize(L.base_match_offers(prepped, catalog, th))
-        _mark("leg_offers_done")
         return concepts, prepped, offers
 
     def leg_tech() -> tuple[DataFrame, DataFrame]:
@@ -150,9 +137,7 @@ def run_pipeline(
             mentions, docs, text_builder=lambda df: E.preprocess(E.concat_text_spans(df))
         )
         props = materialize(EN.extract_properties(context).drop("context"))
-        out = props, materialize(L.technical_matches(props, catalog))
-        _mark("leg_tech_done")
-        return out
+        return props, materialize(L.technical_matches(props, catalog))
 
     def leg_triples() -> DataFrame:
         # E5 dedup up front: apply_canonicalization ends in a
@@ -162,9 +147,7 @@ def run_pipeline(
         # extraction output on the critical path. Reads its own narrow
         # projection of the extraction checkpoint (the triples arrays),
         # not the mentions table.
-        out = materialize(doc_triples.select("subj", "pred", "obj").distinct())
-        _mark("leg_triples_done")
-        return out
+        return materialize(doc_triples.select("subj", "pred", "obj").distinct())
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_offers = pool.submit(_pooled("leg-offers", leg_offers))
@@ -201,7 +184,6 @@ def run_pipeline(
     # evaluates the same un-checkpointed chain, and the two identical
     # concurrent jobs contend: decide segment 1.4 s → 3.6 s measured.)
     decided = materialize(D.decide(best_full, th))
-    _mark("decide_done")
     tasks = D.route_tasks(decided)
     mappings = D.mapping_objects(decided)
 
@@ -219,7 +201,6 @@ def run_pipeline(
     # handles the empty case and apply on an empty map is a no-op.
     canon_map = CC.canonical_mapping(_alias_edges(decided))
     triples = CC.apply_canonicalization(triples, canon_map)
-    _mark("canon_done")
 
     return PipelineResult(
         mentions=mentions,

@@ -35,6 +35,51 @@ from ..fixtures.generator import DOCUMENT_SCHEMA
 from ..operators import extraction as E
 
 
+def _run_available_now(
+    spark: SparkSession,
+    input_dir: str,
+    checkpoint_dir: str,
+    process,
+    timeout_sec: int,
+    schema=DOCUMENT_SCHEMA,
+    max_files_per_trigger: int = 64,
+) -> None:
+    """One availableNow stream over the parquet files in ``input_dir``
+    not yet recorded in ``checkpoint_dir``: ``process(batch_df,
+    batch_id)`` runs once per microbatch, then the call returns."""
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(timeout_sec)
+
+
+def _extract_delta(docs, n_parts: int, surfaces: tuple[str, ...]):
+    """``extract_pipeline`` over one delta of documents.
+
+    A small delta arrives as few files → few partitions (``n_parts``);
+    spread it so the Python extraction uses every core (the shuffle
+    moves only the delta, and only when the input can't fill the
+    slots). pin=False: each caller's sink write is the ONLY consumer,
+    so the default eager materialization would add a full extra pass
+    (count job + memory copy of the batch) per delta — measured as the
+    bulk of the fixed ~1.4 s delta overhead at 80k docs."""
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    if n_parts < par:
+        docs = docs.repartition(par)
+    return E.extract_pipeline(docs, surfaces, pin=False)
+
+
+def _batch_ids(root: Path) -> list[int]:
+    """Committed ``batch_id=N`` directories under ``root``, in order."""
+    return sorted(int(p.name.split("=")[1]) for p in root.glob("batch_id=*") if p.is_dir())
+
+
 def run_incremental_extraction(
     spark: SparkSession,
     input_dir: str,
@@ -44,34 +89,14 @@ def run_incremental_extraction(
     timeout_sec: int = 300,
 ) -> None:
     """availableNow stream: new document parquet files → mentions table."""
-    stream = (
-        spark.readStream.schema(DOCUMENT_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
 
     def _process(batch_df, batch_id: int) -> None:
-        # spread small file-count batches across the executor slots
-        # (same rationale as run_incremental_batch below)
-        par = batch_df.sparkSession.sparkContext.defaultParallelism
-        if batch_df.rdd.getNumPartitions() < par:
-            batch_df = batch_df.repartition(par)
-        # pin=False: the write below is the ONLY consumer, so the
-        # default eager materialization would add a full extra pass
-        # (count job + memory copy of the batch) per trigger — measured
-        # as the bulk of the fixed ~1.4 s delta overhead at 80k docs
-        mentions, _, _ = E.extract_pipeline(batch_df, surfaces, pin=False)
+        mentions, _, _ = _extract_delta(batch_df, batch_df.rdd.getNumPartitions(), surfaces)
         # idempotent per batch: overwrite the batch-scoped directory so
         # a checkpoint-replayed batch cannot duplicate rows
         mentions.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    _run_available_now(spark, input_dir, checkpoint_dir, _process, timeout_sec)
 
 
 def run_incremental_batch(
@@ -112,14 +137,7 @@ def run_incremental_batch(
         return 0
     batch_id = state["n_batches"]
     docs = spark.read.schema(DOCUMENT_SCHEMA).parquet(*new)
-    # a small delta arrives as few files → few partitions; spread it so
-    # the Python extraction uses every core (the shuffle moves only the
-    # delta, and only when the file count can't fill the slots)
-    par = spark.sparkContext.defaultParallelism
-    if len(new) < par:
-        docs = docs.repartition(par)
-    # pin=False: single consumer (the write), same as the stream sink
-    mentions, _, _ = E.extract_pipeline(docs, surfaces, pin=False)
+    mentions, _, _ = _extract_delta(docs, len(new), surfaces)
     mentions.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
     mp.write_text(json.dumps({"files": files, "n_batches": batch_id + 1}))
     return len(new)
@@ -143,30 +161,16 @@ def run_incremental_triples(
     idempotent; ``fold_graph`` below turns the directories into the
     merged ontology graph.
     """
-    stream = (
-        spark.readStream.schema(DOCUMENT_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
 
     def _process(batch_df, batch_id: int) -> None:
-        par = batch_df.sparkSession.sparkContext.defaultParallelism
-        if batch_df.rdd.getNumPartitions() < par:
-            batch_df = batch_df.repartition(par)
-        _, doc_triples, _ = E.extract_pipeline(batch_df, surfaces, pin=False)
+        _, doc_triples, _ = _extract_delta(batch_df, batch_df.rdd.getNumPartitions(), surfaces)
         (
             doc_triples.select("subj", "pred", "obj").distinct()
             .write.mode("overwrite")
             .parquet(f"{graph_root}/triples/batch_id={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    _run_available_now(spark, input_dir, checkpoint_dir, _process, timeout_sec)
 
 
 def fold_canonical_mapping(spark: SparkSession, alias_root: str):
@@ -187,11 +191,8 @@ def fold_canonical_mapping(spark: SparkSession, alias_root: str):
     from ..operators.canonicalize import connected_components, incremental_components
 
     aroot = Path(alias_root)
-    batch_ids = sorted(
-        int(p.name.split("=")[1]) for p in aroot.glob("batch_id=*") if p.is_dir()
-    )
     mapping = None
-    for b in batch_ids:
+    for b in _batch_ids(aroot):
         edges_b = spark.read.parquet(str(aroot / f"batch_id={b}"))
         if mapping is None:
             mapping = connected_components(edges_b)
@@ -222,13 +223,10 @@ def fold_graph(spark: SparkSession, graph_root: str, hierarchy: list[tuple[str, 
 
     nodes, edges = baseline_graph(spark, hierarchy)
     troot = Path(graph_root) / "triples"
-    batch_ids = sorted(
-        int(p.name.split("=")[1]) for p in troot.glob("batch_id=*") if p.is_dir()
-    )
     empty_tasks = spark.createDataFrame(
         [], "name string, parent_class string, status string"
     )
-    for b in batch_ids:
+    for b in _batch_ids(troot):
         triples_b = spark.read.parquet(str(troot / f"batch_id={b}"))
         nodes, edges = merge_graph(nodes, edges, empty_tasks, triples_b, run_id=f"batch-{b}")
         nodes, edges = materialize(nodes), materialize(edges)
@@ -309,15 +307,5 @@ def run_streaming_near_dedup(
             else incremental_components(mapping, edges)
         mapping.write.mode("overwrite").parquet(f"{state_dir}/mapping/v{batch_id}")
 
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    _run_available_now(spark, input_dir, checkpoint_dir, _process, timeout_sec,
+                       "doc_id string, text string", max_files_per_trigger)

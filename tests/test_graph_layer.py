@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ontology_learning_spark.fixtures import baseline, generator
+from ontology_learning_spark.operators import analytics as A
 from ontology_learning_spark.operators import canonicalize as CC
 from ontology_learning_spark.operators import graph_ops as G
 from ontology_learning_spark.sources import tables as TBL
@@ -52,7 +53,13 @@ def test_apply_canonicalization(spark):
     assert len([t for t in out if t[1] == "subclass_of"]) == 1
 
 
-def test_descendants_and_ancestors(graph):
+# driver-side BFS and the distributed frontier-join loop
+bfs_paths = pytest.mark.parametrize("bfs_max_edges", [G._DRIVER_BFS_MAX_EDGES, 0])
+
+
+@bfs_paths
+def test_descendants_and_ancestors(graph, monkeypatch, bfs_max_edges):
+    monkeypatch.setattr(G, "_DRIVER_BFS_MAX_EDGES", bfs_max_edges)
     nodes, edges = graph
     desc = {r["name"]: r["depth"] for r in G.descendants(edges, "ElectronicComponent").collect()}
     assert desc["PassiveComponent"] == 1
@@ -71,11 +78,14 @@ def test_hierarchy_depth_and_leaves(graph):
     assert "Antenna" not in leaf_names and "Thing" not in leaf_names
 
 
-def test_shortest_path(graph):
+@bfs_paths
+def test_shortest_path(graph, monkeypatch, bfs_max_edges):
+    monkeypatch.setattr(G, "_DRIVER_BFS_MAX_EDGES", bfs_max_edges)
     _, edges = graph
     assert G.shortest_path_length(edges, "Resistor", "Capacitor") == 2  # via PassiveComponent
     assert G.shortest_path_length(edges, "FPCAntenna", "Thing") == 5
-    assert G.shortest_path_length(edges, "Resistor", "Resistor") is None or True  # self not asked
+    # the start node is never re-discovered, so a self path is not a path
+    assert G.shortest_path_length(edges, "Resistor", "Resistor") is None
 
 
 def test_siblings_and_degree(graph):
@@ -84,6 +94,23 @@ def test_siblings_and_degree(graph):
     assert sibs == {"Capacitor", "Inductor"}
     top = G.top_k_by_degree(edges, 3).collect()
     assert top[0]["name"] == "ElectronicComponent"  # 6 children + 1 parent
+
+
+def test_graph_stats(graph):
+    nodes, edges = graph
+    n, m = len(nodes.collect()), len(edges.collect())
+    row = G.graph_stats(nodes, edges).collect()[0]
+    assert (row["nodes"], row["edges"]) == (n, m)
+    assert row["density"] == pytest.approx(m / (n * (n - 1)))
+    assert row["avg_degree"] == pytest.approx(2 * m / n)
+
+
+def test_graph_viz_sample(graph):
+    nodes, edges = graph
+    vn, ve = A.graph_viz_sample(nodes, edges, n_nodes=5, n_edges=7)
+    assert [r["name"] for r in vn.collect()] == sorted(r["name"] for r in nodes.collect())[:5]
+    assert [(r["src"], r["rel_type"], r["dst"]) for r in ve.collect()] == sorted(
+        (r["src"], r["rel_type"], r["dst"]) for r in edges.collect())[:7]
 
 
 def test_orphans_and_pruning(spark, graph):

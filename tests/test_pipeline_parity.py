@@ -52,6 +52,24 @@ def test_decisions_parity(result, oracle_result):
     assert not diffs and not extra, f"{len(diffs)} diffs, sample={list(diffs.items())[:5]}, extra={list(extra)[:3]}"
 
 
+def test_decision_stats(result):
+    from collections import Counter
+
+    from ontology_learning_spark.functions import semantics as S
+    from ontology_learning_spark.operators.decisions import decision_stats
+
+    rows = result.decisions.select("decision", "confidence").collect()
+    by = Counter(r["decision"] for r in rows)
+    automated = by[S.EXTEND] + by[S.MAP_EXACT] + by[S.MAP_SIMILAR]
+    got = decision_stats(result.decisions).collect()[0]
+    assert (got["total"], got["extended"], got["mapped_exact"], got["mapped_similar"],
+            got["uncertain"]) == (len(rows), by[S.EXTEND], by[S.MAP_EXACT],
+                                  by[S.MAP_SIMILAR], by[S.UNCERTAIN])
+    assert got["automation_rate"] == pytest.approx(automated / len(rows))
+    assert got["average_confidence"] == pytest.approx(
+        sum(r["confidence"] for r in rows) / len(rows))
+
+
 def test_triples_pr_gate(result, oracle_result):
     got = {(r["subj"], r["pred"], r["obj"]) for r in result.triples.collect()}
     expected = oracle_result["triples"]

@@ -40,6 +40,21 @@ def test_hot_keys(spark):
     assert hot == ["a"]
 
 
+def _assert_equals_batch_extract(spark, out_dir, docs, surfaces):
+    """Extraction is per document, so the union of the delta mention
+    tables equals one batch extraction over every document, row for
+    row (``batch_id`` is the only extra column)."""
+    from collections import Counter
+
+    from ontology_learning_spark.fixtures.generator import DOCUMENT_SCHEMA
+    from ontology_learning_spark.operators.extraction import extract_pipeline
+
+    want, _, _ = extract_pipeline(
+        spark.createDataFrame(docs, schema=DOCUMENT_SCHEMA), surfaces, pin=False)
+    got = spark.read.parquet(out_dir).select(*want.columns)
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
+
+
 def test_incremental_streaming_delta_only(spark, tmp_path, fixture_docs):
     from ontology_learning_spark.fixtures.generator import DOCUMENT_SCHEMA
     from ontology_learning_spark.streaming.incremental import run_incremental_extraction
@@ -68,6 +83,7 @@ def test_incremental_streaming_delta_only(spark, tmp_path, fixture_docs):
     # distinct doc ids should equal the union of both batches' mention docs
     total_docs = spark.read.parquet(out_dir).select("doc_id").distinct().count()
     assert total_docs <= 80
+    _assert_equals_batch_extract(spark, out_dir, fixture_docs[:80], surfaces)
 
 
 def test_incremental_batch_manifest_exactly_once(spark, tmp_path, fixture_docs):
@@ -109,3 +125,4 @@ def test_incremental_batch_manifest_exactly_once(spark, tmp_path, fixture_docs):
     run_incremental_batch(
         spark, in_dir, one_shot_dir, str(tmp_path / "m2.json"), surfaces)
     assert spark.read.parquet(one_shot_dir).count() == n2
+    _assert_equals_batch_extract(spark, out_dir, fixture_docs[:80], surfaces)
