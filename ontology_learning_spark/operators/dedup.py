@@ -339,6 +339,39 @@ def minhash_lsh_candidates(
     )
 
 
+def _signature_mins(base: np.ndarray, offsets: list[int], a_vec: np.ndarray,
+                    b_vec: np.ndarray, cap: int) -> np.ndarray:
+    """MinHash signatures: row d is the column-wise min of
+    ``(g * a + b) % _MERSENNE_P`` over the gram hashes
+    ``base[offsets[d]:offsets[d + 1]]`` (every document non-empty). The
+    (grams x hashes) product is built at most ``cap`` grams at a time:
+    consecutive documents share a chunk, and a document longer than
+    ``cap`` is folded slice by slice with ``np.minimum`` (min is
+    associative, so the result is exact)."""
+    mersenne = np.int64(_MERSENNE_P)
+    n_docs = len(offsets) - 1
+    mins = np.empty((n_docs, len(a_vec)), dtype=np.int64)
+
+    def hashed(g0: int, g1: int) -> np.ndarray:
+        return (base[g0:g1, None] * a_vec[None, :] + b_vec[None, :]) % mersenne
+
+    c0 = 0
+    while c0 < n_docs:
+        c1 = c0 + 1
+        g0 = offsets[c0]
+        while c1 < n_docs and offsets[c1 + 1] - g0 <= cap:
+            c1 += 1
+        g1 = offsets[c1]
+        if g1 - g0 <= cap:
+            starts = np.asarray(offsets[c0:c1], dtype=np.int64) - g0
+            mins[c0:c1] = np.minimum.reduceat(hashed(g0, g1), starts, axis=0)
+        else:  # one document alone exceeds the cap: fold it slice by slice
+            mins[c0] = np.minimum.reduce(
+                [hashed(s0, min(s0 + cap, g1)).min(axis=0) for s0 in range(g0, g1, cap)])
+        c0 = c1
+    return mins
+
+
 def minhash_band_table(
     df: DataFrame,
     text_col: str = "text",
@@ -376,7 +409,6 @@ def minhash_band_table(
     b_vec = np.array([b for _, b in params], dtype=np.int64)
     n = shingle_n
     p31 = np.int64(1 << 31)
-    mersenne = np.int64(_MERSENNE_P)
 
     import pyarrow as pa
 
@@ -410,20 +442,8 @@ def minhash_band_table(
             # modulus), exactly pmod.
             base = xxh64_many(gram_bytes) % p31
             n_docs_b = len(doc_ids)
-            mins = np.empty((n_docs_b, num_hashes), dtype=np.int64)
-            # chunk the (grams x num_hashes) outer product to bound
-            # worker memory (~90 MB per 120k-gram chunk at 90 hashes)
-            c0 = 0
-            while c0 < n_docs_b:
-                c1 = c0 + 1
-                g0 = offsets[c0]
-                while c1 < n_docs_b and offsets[c1 + 1] - g0 <= 120_000:
-                    c1 += 1
-                g1 = offsets[c1]
-                prod = (base[g0:g1, None] * a_vec[None, :] + b_vec[None, :]) % mersenne
-                starts = np.asarray(offsets[c0:c1], dtype=np.int64) - g0
-                mins[c0:c1] = np.minimum.reduceat(prod, starts, axis=0)
-                c0 = c1
+            # ~90 MB of worker memory per 120k-gram chunk at 90 hashes
+            mins = _signature_mins(base, offsets, a_vec, b_vec, 120_000)
             # band hash: xxhash64 of the comma-joined signature slice —
             # identical bytes to concat_ws(",", m...) (Long.toString ≡
             # str(int) for decimal longs)

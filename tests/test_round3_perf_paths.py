@@ -1,8 +1,11 @@
 """Round-3 additions: min_by argmax equivalence, single-exchange window
-ranking, exact SCC cycle membership, domain/range axiom checks, and the
-bounded BFS shortest-path view on a dense graph."""
+ranking, exact SCC cycle membership, domain/range axiom checks, the
+bounded BFS shortest-path view on a dense graph, and the plan size of
+every QA view."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -179,3 +182,26 @@ def test_q16_bfs_bounded_on_dense_graph(spark):
     con.executemany("INSERT INTO ont_edges VALUES (?,?,?)", rows)
     dk = con.execute(Q.qa_corpus_sql("duckdb")["qa_q16_shortest_path"]).fetchall()
     assert dk == [("Resistor", "Antenna", 3)]
+
+
+def _join_nodes(plan_tree: str) -> int:
+    """Join operators in a plan's tree string (subquery plans included)."""
+    return len(re.findall(r"^[\s:+\-|]*Join ", plan_tree, flags=re.M))
+
+
+def test_qa_view_plans_stay_small(spark):
+    """Every QA view's optimized plan holds a handful of joins. The
+    7-level shortest-path BFS once read each level twice, so Catalyst
+    inlined 2^7 copies of it: 127 joins and seconds of planning."""
+    from ontology_learning_spark.operators import qa_views as Q
+    from ontology_learning_spark.sources.tables import baseline_graph
+
+    nodes, edges = baseline_graph(spark, baseline.ONTOLOGY_HIERARCHY)
+    names = Q.create_qa_views(spark, nodes, edges)
+    joins = {
+        v: _join_nodes(spark.table(v)._jdf.queryExecution().optimizedPlan().treeString())
+        for v in names
+    }
+    assert len(joins) == 29
+    assert joins["qa_q28_redundant"] >= 1  # the counter sees joins at all
+    assert max(joins.values()) <= 8, {v: n for v, n in joins.items() if n > 8}

@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 
 from ontology_learning_spark.functions.xxh64 import xxh64_many, xxh64_signed, xxh64_str
 from ontology_learning_spark.operators.dedup import (
+    _MERSENNE_P,
+    _hash_params,
+    _signature_mins,
     minhash_band_table,
     minhash_band_table_catalyst,
 )
@@ -89,3 +92,25 @@ def test_exploded_gram_hashes_parity(spark):
         new = exploded_gram_hashes(df, "text", "doc_id", n)
         assert new.exceptAll(ref).count() == 0
         assert ref.exceptAll(new).count() == 0
+
+
+def test_signature_mins_chunks_inside_an_oversized_document():
+    """A document with more grams than the chunk cap is folded in gram
+    slices; the signatures, and so the band rows, are byte-identical to
+    the unchunked fold and to a per-document min."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    sizes = [1, 5, 23, 7, 2, 40, 3, 8]  # cap 7: 23, 40 and 8 exceed it, 7 fits
+    offsets = np.concatenate([[0], np.cumsum(sizes)]).tolist()
+    base = rng.integers(0, 1 << 31, size=offsets[-1], dtype=np.int64)
+    params = _hash_params(12)
+    a_vec = np.array([a for a, _ in params], dtype=np.int64)
+    b_vec = np.array([b for _, b in params], dtype=np.int64)
+    chunked = _signature_mins(base, offsets, a_vec, b_vec, 7)
+    whole = _signature_mins(base, offsets, a_vec, b_vec, offsets[-1])
+    assert chunked.tobytes() == whole.tobytes()
+    for d in range(len(sizes)):
+        grams = base[offsets[d]:offsets[d + 1]].tolist()
+        want = [min((g * a + b) % _MERSENNE_P for g in grams) for a, b in params]
+        assert chunked[d].tolist() == want
