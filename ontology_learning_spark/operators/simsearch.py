@@ -509,6 +509,12 @@ def train_pq_codebooks(
         .collect()
     )
     X = np.stack([np.asarray(r["v"], dtype=np.float64) for r in sample_rows])
+    return _lloyd_codebooks(X, m, n_codes, n_iters, seed)
+
+
+def _lloyd_codebooks(X: np.ndarray, m: int, n_codes: int, n_iters: int, seed: int) -> np.ndarray:
+    """Per-subspace Lloyd k-means over the (n, d) sample ``X``; returns
+    (m, min(n_codes, n), d/m) codebooks."""
     d = X.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -522,7 +528,11 @@ def train_pq_codebooks(
         init_idx = rng.permutation(Xj.shape[0])[:k]
         C_ = Xj[init_idx].copy()
         for _ in range(n_iters):
-            dist = (C_ * C_).sum(axis=1)[None, :] - 2.0 * (Xj @ C_.T)
+            # einsum, not Xj @ C_.T: numpy's BLAS runs this small product
+            # on threads that spin in the driver after every call. Its
+            # sums may differ in the last bit, which moves no assignment
+            # on continuous data (tests/test_pq.py compares codebooks).
+            dist = (C_ * C_).sum(axis=1)[None, :] - 2.0 * np.einsum("ij,kj->ik", Xj, C_)
             a = np.argmin(dist, axis=1)
             newC = C_.copy()
             for c in range(k):

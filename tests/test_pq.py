@@ -95,3 +95,39 @@ def test_ivf_pq_full_probe_equals_plain_pq(clustered_df):
     exact25 = {r["vec_id"] for r in SS.brute_force_topk(clustered_df, q, k=25).collect()}
     assert all(i % 4 == 3 for i in one), "hit outside the query's planted cluster"
     assert len(one & exact25) >= 6
+
+
+def _lloyd_with_matmul(X, m, n_codes, n_iters, seed):
+    """The Lloyd loop as it read with ``Xj @ C_.T`` distances."""
+    sub = X.shape[1] // m
+    k = min(n_codes, X.shape[0])
+    rng = np.random.RandomState(seed)
+    books = np.empty((m, k, sub))
+    for j in range(m):
+        Xj = X[:, j * sub:(j + 1) * sub]
+        C_ = Xj[rng.permutation(Xj.shape[0])[:k]].copy()
+        for _ in range(n_iters):
+            dist = (C_ * C_).sum(axis=1)[None, :] - 2.0 * (Xj @ C_.T)
+            a = np.argmin(dist, axis=1)
+            newC = C_.copy()
+            for c in range(k):
+                mask = a == c
+                if mask.any():
+                    newC[c] = Xj[mask].mean(axis=0)
+                else:
+                    newC[c] = Xj[int(np.argmax(dist[np.arange(len(a)), a]))]
+            done = np.allclose(newC, C_, atol=1e-10)
+            C_ = newC
+            if done:
+                break
+        books[j] = C_
+    return books
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_lloyd_codebooks_match_the_matmul_loop(seed):
+    # the benchmark's shape: ~2,000 sample rows, d=64, m=8, 64 codes
+    rng = np.random.RandomState(seed)
+    X = rng.randn(2010, 64) + rng.randn(8, 64)[rng.randint(0, 8, 2010)] * 3
+    got = SS._lloyd_codebooks(X, m=8, n_codes=64, n_iters=10, seed=42)
+    assert np.array_equal(got, _lloyd_with_matmul(X, 8, 64, 10, 42))
