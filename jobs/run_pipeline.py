@@ -71,7 +71,8 @@ def main() -> None:
     store.materialize("nodes", lambda: nodes_df)
     store.materialize("edges", lambda: edges_df, partition_by=["rel_type"])
 
-    n_triples = triples_df.count()
+    # the triples stage's committed row already counted it (parquet footers)
+    n_triples = store.manifest.stage_commit(args.run_id, "triples")["rows"]
     n_docs = docs.count()
     wall = time.time() - t0
     print(json.dumps({

@@ -19,6 +19,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class ManifestLog:
@@ -35,15 +36,21 @@ class ManifestLog:
             return []
         return [json.loads(l) for l in self.path.read_text().splitlines() if l.strip()]
 
-    def committed(self, run_id: str, stage: str) -> bool:
-        # rows carrying a "partition" key are PARTIAL (per-partition)
-        # commits from materialize_by_partition; only the stage-level
-        # marker makes the stage done.
-        return any(
-            e["run_id"] == run_id and e["stage"] == stage
+    def stage_commit(self, run_id: str, stage: str) -> dict | None:
+        """The last stage-level commit row of (run_id, stage), or None.
+
+        Rows carrying a "partition" key are PARTIAL (per-partition)
+        commits from materialize_by_partition; only the stage-level
+        marker makes the stage done."""
+        rows = [
+            e for e in self.entries()
+            if e["run_id"] == run_id and e["stage"] == stage
             and e["status"] == "committed" and "partition" not in e
-            for e in self.entries()
-        )
+        ]
+        return rows[-1] if rows else None
+
+    def committed(self, run_id: str, stage: str) -> bool:
+        return self.stage_commit(run_id, stage) is not None
 
     def committed_partitions(self, run_id: str, stage: str) -> set[str]:
         return {
@@ -96,30 +103,35 @@ class StageStore:
         The manifest row carries per-PARTITION lineage (north-rule
         contract): row counts per partition value for partitioned
         writes, else per output file — enough to audit which partition
-        a row came from and re-verify any single partition."""
+        a row came from and re-verify any single partition. The counts
+        come from the written files' parquet footers and the stage is
+        read back with the frame's own schema, so the write is the
+        call's only Spark job."""
         if self.is_done(stage):
             return self.read(stage)
         t0 = time.time()
         df = df_fn()
+        path = self._path(stage)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._path(stage))
-        out = self.spark.read.parquet(self._path(stage))
-        if partition_by:
-            parts = out.groupBy(*partition_by).count().collect()
-            lineage = {
-                "|".join(str(r[c]) for c in partition_by): r["count"] for r in parts
-            }
-        else:
-            files = out.groupBy(F.input_file_name().alias("f")).count().collect()
-            lineage = {Path(r["f"]).name: r["count"] for r in files}
-        total = sum(lineage.values())
+        writer.parquet(path)
+        lineage = _footer_rows(Path(path), partition_by or [])
         self.manifest.commit(
-            self.run_id, stage, total, (time.time() - t0) * 1000,
+            self.run_id, stage, sum(lineage.values()), (time.time() - t0) * 1000,
             extra={"partitions": lineage},
         )
-        return out
+        return self._read_as(df, stage, partition_by or [])
+
+    def _read_as(self, df: DataFrame, stage: str, partition_by: list[str]) -> DataFrame:
+        """Read a written stage with ``df``'s schema, partition columns
+        last (the order partition discovery gives): no schema-inference
+        job, and partition values keep their computed type. An empty
+        stage may have no directory; it reads as 0 rows."""
+        Path(self._path(stage)).mkdir(parents=True, exist_ok=True)
+        fields = [f for f in df.schema.fields if f.name not in partition_by]
+        schema = T.StructType(fields + [df.schema[c] for c in partition_by])
+        return self.spark.read.schema(schema).parquet(self._path(stage))
 
     def materialize_by_partition(self, stage: str, df_fn, partition_col: str) -> DataFrame:
         """Partition-granular resumable write (ref stage-cache semantics
@@ -135,6 +147,8 @@ class StageStore:
         plan; callers should hand in a df_fn whose input is already a
         pinned stage table so the per-partition re-derivation is a
         pruned scan, not a recompute of the whole upstream pipeline.
+        Partition and stage row counts come from the parquet footers,
+        so each partition costs its write job and nothing else.
         """
         if self.is_done(stage):
             return self.read(stage)
@@ -156,9 +170,7 @@ class StageStore:
                 "sentinel value before partition-granular materialization"
             )
         values = sorted(str(v) for v in raw_values)
-        part_dtype = df.schema[partition_col].dataType
         done = self.manifest.committed_partitions(self.run_id, stage)
-        total_rows = 0
         for v in values:
             if v in done:
                 continue
@@ -170,23 +182,48 @@ class StageStore:
             part_path = f"{self._path(stage)}/{partition_col}={quote(v, safe='')}"
             part_df = df.where(F.col(partition_col).cast("string") == v).drop(partition_col)
             part_df.write.mode("overwrite").parquet(part_path)
-            n = self.spark.read.parquet(part_path).count()
-            total_rows += n
+            n = sum(_footer_rows(Path(part_path), []).values())
             self.manifest.commit(
                 self.run_id, stage, n, (time.time() - tp) * 1000,
                 extra={"partition": v},
             )
-        # Partition discovery re-infers the partition column's type from
-        # the path strings (a numeric-looking string column would come
-        # back as int); pin it back to the frame's computed dtype.
-        out = self.spark.read.parquet(self._path(stage)).withColumn(
-            partition_col, F.col(partition_col).cast(part_dtype)
-        )
+        out = self._read_as(df, stage, [partition_col])
         self.manifest.commit(
-            self.run_id, stage, out.count(), (time.time() - t0) * 1000,
+            self.run_id, stage, sum(_footer_rows(Path(self._path(stage)), []).values()),
+            (time.time() - t0) * 1000,
             extra={"partitions": {v: None for v in values}},
         )
         return out
+
+
+_HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _footer_rows(root: Path, partition_by: list[str]) -> dict[str, int]:
+    """Rows per data file under ``root`` (keyed by file name), or per
+    partition (keyed by the ``|``-joined unescaped partition values,
+    ``"None"`` for Hive's default partition) when ``partition_by`` is
+    given, read from the parquet footers on the driver: no Spark job.
+    Files Spark's listing skips (``_``/``.`` prefixes) and 0-row files
+    (an empty frame's schema-only file) are left out."""
+    import pyarrow.parquet as pq
+    from urllib.parse import unquote
+
+    lineage: dict[str, int] = {}
+    for f in sorted(root.rglob("*.parquet")):
+        parts = f.relative_to(root).parts
+        if any(p.startswith(("_", ".")) for p in parts):
+            continue
+        n = pq.read_metadata(f).num_rows
+        if not n:
+            continue
+        if partition_by:
+            values = [unquote(d.split("=", 1)[1]) for d in parts[:-1]]
+            key = "|".join("None" if v == _HIVE_DEFAULT_PARTITION else v for v in values)
+        else:
+            key = f.name
+        lineage[key] = lineage.get(key, 0) + n
+    return lineage
 
 
 # ---------------------------------------------------------------------------
