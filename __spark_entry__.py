@@ -1299,7 +1299,7 @@ def _q_emb_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-10 over the planted neighborhood (see lsh_topk):
+    """IVF ANN top-10 over the planted neighborhood (see _q_emb_lsh_topk):
     the near cluster is always probed, so output == brute force."""
     from ontology_learning_spark.operators.simsearch import ivf_topk, train_ivf_centroids
 

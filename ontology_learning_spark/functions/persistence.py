@@ -10,10 +10,10 @@ the fastest way to pin a subtree that several concurrent consumer
 stages would otherwise race-recompute (see plans/pipeline.py).
 
 For SMALL (vocabulary-sized) pins on a multi-executor master the
-default flips to a replicated persist + eager count: lineage is kept
+strategy flips to a replicated persist + eager count: lineage is kept
 (lost blocks are recomputable) and blocks are 2x-replicated so a
-single executor loss usually doesn't even trigger a recompute.
-Callers can force either strategy with ``reliable=``.
+single executor loss usually doesn't even trigger a recompute. The
+master alone picks between these two.
 
 CORPUS-SCALE pins (``corpus_scale=True``) get a third strategy on
 real (non-local) cluster masters: a zstd-parquet round trip. Measured
@@ -32,8 +32,9 @@ sizes, and the parquet encode of nested arrays costs real CPU
 (+88% extraction-stage JVM core-s in matched clean-window profiles —
 BENCH/BASELINE.md round 5) with nothing to buy back. On a real
 cluster point ``OLS_CHECKPOINT_DIR`` at a shared filesystem (HDFS/S3).
-``OLS_CORPUS_CHECKPOINT=blocks|parquet`` forces either strategy
-regardless of master (the A/B comparator knob).
+``OLS_CORPUS_CHECKPOINT=blocks|parquet`` forces either corpus-scale
+strategy regardless of master; it is how tests reach the parquet
+strategy on a local master.
 """
 
 from __future__ import annotations
@@ -87,9 +88,7 @@ def _parquet_checkpoint(df: DataFrame) -> DataFrame:
     return spark.read.schema(df.schema).parquet(path)
 
 
-def materialize(
-    df: DataFrame, reliable: bool | None = None, corpus_scale: bool = False
-) -> DataFrame:
+def materialize(df: DataFrame, corpus_scale: bool = False) -> DataFrame:
     """Eagerly materialize ``df`` so concurrent consumers never
     recompute its subtree. See module docstring for the strategy
     matrix; ``corpus_scale=True`` marks pins whose size tracks the
@@ -100,9 +99,7 @@ def materialize(
         forced = os.environ.get("OLS_CORPUS_CHECKPOINT")
         if forced == "parquet" or (forced != "blocks" and not _is_sandbox_local(master)):
             return _parquet_checkpoint(df)
-    if reliable is None:
-        reliable = not master.startswith("local")
-    if not reliable:
+    if _is_sandbox_local(master):
         return df.localCheckpoint(eager=True)
     out = df.persist(StorageLevel.MEMORY_AND_DISK_2)
     out.count()

@@ -76,21 +76,12 @@ def connected_components(
     # (or the InMemoryRelation a persist) leaves behind reports no
     # outputPartitioning, so every round re-exchanges regardless
     # (measured on 4.1; explicit-count repartition changes nothing).
-    # The lever that DOES survive is catalog metadata: for repeated CC
-    # over a stable edge set, write it bucketed by dst
-    # (sources/bucketing.py) and the join side drops out. What this
-    # loop owns instead: the convergence check is FUSED into the label
-    # update below (a _changed flag on the frame we pin anyway) —
-    # the old separate new-vs-old join cost a third join + two more
-    # exchanges + an extra pass per round.
+    # What this loop owns instead: the convergence check is FUSED into
+    # the label update below (a _changed flag on the frame we pin
+    # anyway) — the old separate new-vs-old join cost a third join +
+    # two more exchanges + an extra pass per round.
     e = _symmetrize(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     e = e.localCheckpoint()
-    return _min_label_loop(e, max_iter)
-
-
-def _min_label_loop(e: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label propagation rounds over a pinned symmetric (src, dst)
-    edge frame; returns (node, component)."""
     labels = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -128,33 +119,6 @@ def _min_label_loop(e: DataFrame, max_iter: int) -> DataFrame:
             break
 
     return labels
-
-
-def connected_components_bucketed(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_buckets: int = 64,
-    table: str = "cc_edges_bucketed",
-    max_iter: int = 50,
-) -> DataFrame:
-    """``connected_components`` for corpus-scale edge sets: pins the
-    symmetrized edges as a parquet table bucketed by dst, so the BIG
-    side of every round's labels-onto-edges join is exchange-free —
-    bucketing is catalog metadata, the one partitioning carrier that
-    survives AQE and checkpoints (see the shuffle-budget note in
-    ``connected_components``). The node-sized labels side still
-    exchanges; at 10^9 edges vs 10^7 distinct nodes that is the right
-    trade. The one-time bucketed write costs a shuffle — it pays for
-    itself from the second round on, and is amortized across runs when
-    the alias graph is stable between pipeline executions.
-    """
-    spark = edges.sparkSession
-    from ..sources.bucketing import write_bucketed
-
-    e0 = _symmetrize(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    write_bucketed(e0, table, "dst", n_buckets=n_buckets)
-    return _min_label_loop(spark.table(table), max_iter)
 
 
 def _uf_min_labels(pairs: list[tuple[str, str]]) -> dict[str, str]:

@@ -15,8 +15,6 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import NamedTuple
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -382,8 +380,9 @@ def minhash_band_table(
     threshold: float = 0.9,
 ) -> DataFrame:
     """The (id, band, bh) band-key table for a corpus slice — the
-    persistable LSH state an INCREMENTAL dedup maintains: a delta's
-    keys join against the stored table instead of re-signing history.
+    LSH state ``streaming.incremental.run_streaming_near_dedup`` stores
+    per batch: a delta's keys join against the stored table instead of
+    re-signing history.
     Geometry is threshold-driven (``minhash_plan``) and therefore
     corpus-size-INDEPENDENT, which is what makes the table stable
     across deltas (the same threshold always produces the same keys).
@@ -824,114 +823,6 @@ def simhash_near_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_
 
 
 # ---------------------------------------------------------------------------
-# Incremental near-dup dedup: persistable (bands, mapping) state
-# ---------------------------------------------------------------------------
-
-
-class DedupState(NamedTuple):
-    """The two tables an incremental dedup maintains between deltas:
-    ``bands`` — (id, band, bh) LSH keys of every doc ingested so far
-    (at scale: a bucketed-by-(band, bh) table, appended per delta);
-    ``mapping`` — (node, component) over every doc that appears in a
-    verified near-dup pair (node-sized, tiny next to the corpus)."""
-
-    bands: DataFrame
-    mapping: DataFrame
-
-
-def _pairs_to_edges(pairs: DataFrame) -> DataFrame:
-    return pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-
-
-def dedup_state_init(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    num_hashes: int | None = None,
-    bands: int | None = None,
-) -> DedupState:
-    """First full pass: band table + verified pairs + CC mapping."""
-    from ..functions.persistence import materialize
-    from .canonicalize import connected_components
-
-    b = materialize(minhash_band_table(df, text_col, id_col, num_hashes,
-                                       bands, shingle_n, threshold))
-    a_, b_ = b.alias("a"), b.alias("b")
-    cands = (
-        a_.join(b_, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    pairs = jaccard_verify(cands, df, text_col, id_col, threshold, shingle_n)
-    mapping = materialize(connected_components(_pairs_to_edges(pairs)))
-    return DedupState(b, mapping)
-
-
-def dedup_state_update(
-    state: DedupState,
-    new_docs: DataFrame,
-    all_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    num_hashes: int | None = None,
-    bands: int | None = None,
-) -> DedupState:
-    """Fold a document delta into the dedup state WITHOUT re-signing or
-    re-pairing history: the delta's band keys join against the stored
-    band table (new×hist ∪ new×new candidates only — hist×hist pairs
-    are already folded into the mapping by induction), verified pairs
-    go through ``incremental_components``, and the band table grows by
-    the delta's keys. ``all_docs`` is the id→text lookup for the
-    verify step (hist ∪ delta); only candidate ids are fetched from it
-    (semi-join inside ``jaccard_verify``).
-
-    Invariant (pytest-pinned): after any split of a corpus into
-    init + updates, ``state.mapping`` equals the mapping a full
-    one-shot run produces over the whole corpus — use the SAME
-    threshold/geometry across deltas (the threshold-driven plan is
-    corpus-size-independent, so this is the default behavior).
-    """
-    from ..functions.persistence import materialize
-    from .canonicalize import incremental_components
-
-    nb = materialize(minhash_band_table(new_docs, text_col, id_col, num_hashes,
-                                        bands, shingle_n, threshold))
-    all_bands = state.bands.unionByName(nb)
-    a_, b_ = nb.alias("a"), all_bands.alias("b")
-    cands = (
-        a_.join(b_, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.id") != F.col("b.id")))
-        .select(
-            F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
-            F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
-        )
-        .distinct()
-    )
-    pairs = jaccard_verify(cands, all_docs, text_col, id_col, threshold, shingle_n)
-    mapping = materialize(incremental_components(state.mapping, _pairs_to_edges(pairs)))
-    # bands stays a LAZY union of already-pinned parts — re-materializing
-    # it would rewrite the whole history every fold (measured: the
-    # re-checkpoint dominated the delta wall at 320k docs). At scale
-    # this is an APPEND of the delta's partition to the bucketed table.
-    return DedupState(all_bands, mapping)
-
-
-def dedup_state_clusters(state: DedupState) -> DataFrame:
-    """(canonical_id, cluster_size) for clusters of size ≥ 2, from the
-    live mapping (canonical = min member id, the mapping's label)."""
-    return (
-        state.mapping.groupBy(F.col("component").alias("canonical_id"))
-        .agg(F.count("*").alias("cluster_size"))
-        .where(F.col("cluster_size") >= 2)
-    )
-
-
-# ---------------------------------------------------------------------------
 # Decontamination: eval-set n-gram overlap against a training corpus
 # ---------------------------------------------------------------------------
 
@@ -985,21 +876,3 @@ def decontaminate(
     bad = contamination_report(train, eval_df, text_col, id_col, n).select(id_col)
     return train.join(F.broadcast(bad), id_col, "left_anti")
 
-
-def dedup_state_save(state: DedupState, path: str) -> None:
-    """Persist the state durably: bands partitioned by band (the probe
-    side of every future delta join), mapping as one small table. On a
-    real deployment these are Iceberg tables and the band write is an
-    APPEND per delta; here one overwrite keeps the sandbox contract
-    simple and restart-safe (write-then-swap is the production form)."""
-    state.bands.write.mode("overwrite").partitionBy("band").parquet(f"{path}/bands")
-    state.mapping.write.mode("overwrite").parquet(f"{path}/mapping")
-
-
-def dedup_state_load(spark, path: str) -> DedupState:
-    """Reload a saved state; the parquet band table keeps its partition
-    pruning, so a delta fold after restart reads only matching bands."""
-    return DedupState(
-        spark.read.parquet(f"{path}/bands").select("id", "band", "bh"),
-        spark.read.parquet(f"{path}/mapping"),
-    )

@@ -18,57 +18,30 @@ CONTEXT_CHUNKS = S.CONTEXT_CHUNKS
 CONTEXT_CAP = S.CONTEXT_CAP
 
 
-def top_docs_per_concept(
-    mentions: DataFrame, n: int = CONTEXT_CHUNKS, salted: bool = False
-) -> DataFrame:
+def top_docs_per_concept(mentions: DataFrame, n: int = CONTEXT_CHUNKS) -> DataFrame:
     """(norm_surface, doc_id, rn): the n smallest doc_ids mentioning
     each concept, from RAW mention rows (multiplicities included).
 
-    The shipped plan (``salted=False``) is ONE window with a rank-limit
-    filter — and on Spark ≥3.5 that is already skew-proof: Catalyst
-    rewrites `dense_rank() <= n` into WindowGroupLimit with a PARTIAL
-    pass below the exchange, so each map partition pre-prunes to its
-    local top-n per concept before anything is shuffled. A head
-    concept's group never materializes: the reduce side sees at most
-    n·num_map_partitions rows per concept regardless of how many
-    billions of raw mentions it has. Measured (BENCH/BASELINE.md "Skew
-    at scale", 320k docs): the stage wall is FLAT (3.3 → 2.6 s) while
-    the planted hot group grows 4.8M → 16.5M rows. The surviving dense
-    rank IS the distinct-doc row number, so the post-filter dedup is
-    exact.
-
-    ``salted=True`` keeps the round-3 hand-salted two-phase plan
-    (phase 1 ranks within (concept, salt-of-32) buckets, phase 2 ranks
-    the ≤32n survivors). It exists for engines without WindowGroupLimit
-    and as the A/B comparator; on Spark 4 it is strictly worse — its
-    map-side prune keeps 32× more rows (≤n per (concept, salt) instead
-    of per concept) and it pays a second corpus-keyed exchange
-    (measured +1.0-2.1 s on the stage, +2.0-3.0 s end-to-end through
-    E7, at 320k docs).
+    ONE window with a rank-limit filter — and on Spark ≥3.5 that is
+    already skew-proof: Catalyst rewrites `dense_rank() <= n` into
+    WindowGroupLimit with a PARTIAL pass below the exchange, so each
+    map partition pre-prunes to its local top-n per concept before
+    anything is shuffled. A head concept's group never materializes:
+    the reduce side sees at most n·num_map_partitions rows per concept
+    regardless of how many billions of raw mentions it has. Measured
+    (BENCH/BASELINE.md "Skew at scale", 320k docs): the stage wall is
+    FLAT (3.3 → 2.6 s) while the planted hot group grows 4.8M → 16.5M
+    rows; a hand-salted two-phase plan measured 1.0-2.1 s slower on the
+    same stage. The surviving dense rank IS the distinct-doc row
+    number, so the post-filter dedup is exact.
     """
-    pairs = mentions.select("norm_surface", "doc_id")
-    if not salted:
-        w = Window.partitionBy("norm_surface").orderBy("doc_id")
-        return (
-            pairs.withColumn("_rk", F.dense_rank().over(w))
-            .where(F.col("_rk") <= n)
-            .dropDuplicates(["norm_surface", "doc_id"])
-            .select("norm_surface", "doc_id", F.col("_rk").alias("rn"))
-        )
-    salt = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(32))
-    w1 = Window.partitionBy("norm_surface", "_salt").orderBy("doc_id")
-    pre = (
-        pairs.withColumn("_salt", salt)
-        .withColumn("_rk1", F.dense_rank().over(w1))
-        .where(F.col("_rk1") <= n)
-        .drop("_salt", "_rk1")
-        .dropDuplicates(["norm_surface", "doc_id"])
-    )
     w = Window.partitionBy("norm_surface").orderBy("doc_id")
     return (
-        pre.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n)
-        .select("norm_surface", "doc_id", "rn")
+        mentions.select("norm_surface", "doc_id")
+        .withColumn("_rk", F.dense_rank().over(w))
+        .where(F.col("_rk") <= n)
+        .dropDuplicates(["norm_surface", "doc_id"])
+        .select("norm_surface", "doc_id", F.col("_rk").alias("rn"))
     )
 
 

@@ -3,10 +3,10 @@
 - Brute-force cosine top-k: JVM-side dot/norm via higher-order array
   functions (columns.cosine) — the correctness baseline, one pass, no
   Python, no shuffle except the global top-k window.
-- LSH-bucketed ANN (random hyperplanes): the scale path — signature is
-  computed map-side from a deterministic seeded projection; the probe
-  only scores vectors sharing a bucket (multi-probe over signature
-  neighbors for recall).
+- Banded LSH ANN (random hyperplanes): the scale path — band
+  signatures are computed map-side from a deterministic seeded
+  projection; the probe only scores vectors sharing ANY of the query's
+  band signatures (the OR-construction buys recall).
 """
 
 from __future__ import annotations
@@ -148,61 +148,6 @@ def _resolve_lsh_geometry(
     return bands, max(4, math.floor(math.log(need / bands) / math.log(p_bit)))
 
 
-def lsh_signatures(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane signature as an int bucket id (vectorized UDF:
-    one matmul per Arrow batch)."""
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @F.pandas_udf(T.IntegerType())
-    def sig_udf(vecs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (m @ planes.T) > 0
-        out = np.zeros(len(vecs), dtype=np.int32)
-        for b in range(planes.shape[0]):
-            out |= bits[:, b].astype(np.int32) << b
-        return pd.Series(out)
-
-    return df.withColumn("lsh_bucket", sig_udf(F.col(vec_col)))
-
-
-def lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 12,
-    seed: int = 42,
-    multiprobe_bits: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ANN top-k: score only vectors in the query's bucket (plus
-    buckets within `multiprobe_bits` bit-flips for recall)."""
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_planes, seed)
-    qbits = (planes @ np.asarray(query_vec, dtype=np.float64)) > 0
-    qsig = 0
-    for b in range(n_planes):
-        qsig |= int(qbits[b]) << b
-    probes = {qsig}
-    if multiprobe_bits >= 1:
-        for b in range(n_planes):
-            probes.add(qsig ^ (1 << b))
-    if multiprobe_bits >= 2:
-        for b1 in range(n_planes):
-            for b2 in range(b1 + 1, n_planes):
-                probes.add(qsig ^ (1 << b1) ^ (1 << b2))
-
-    with_sig = lsh_signatures(df, dim, n_planes, seed, vec_col)
-    cand = with_sig.where(F.col("lsh_bucket").isin(*[int(p) for p in probes]))
-    return brute_force_topk(cand, query_vec, k, vec_col, id_col)
-
-
 def lsh_band_signatures(
     df: DataFrame,
     dim: int,
@@ -251,12 +196,12 @@ def lsh_banded_topk(
 ) -> DataFrame:
     """ANN top-k via banded OR-construction: candidates = vectors
     sharing ANY of the query's ``bands`` signatures, then exact cosine
-    top-k within candidates. Complements the single-signature
-    multiprobe ``lsh_topk``: banding reaches neighbors whose signature
-    differs by >multiprobe bits (miss probability for a cos>=0.99
-    neighbor at 8x6 is (1-0.986^6)^8 ~ 2e-9 vs ~unbounded for fixed-
-    radius probing). At scale the signature table is precomputed and
-    partitioned by (band, sig) so the probe is partition pruning.
+    top-k within candidates. Banding reaches neighbors whose single
+    signature differs in many bits (miss probability for a cos>=0.99
+    neighbor at 8x6 is (1-0.986^6)^8 ~ 2e-9, where fixed-radius bit-
+    flip probing of one signature has no such bound). At scale the
+    signature table is precomputed and partitioned by (band, sig) so
+    the probe is partition pruning.
 
     ``bands``/``rows_per_band`` default to ``lsh_plan(n,
     recall_threshold)`` — candidate volume stays ~O(n·bands/4) instead

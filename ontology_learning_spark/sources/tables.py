@@ -49,9 +49,6 @@ class ManifestLog:
         ]
         return rows[-1] if rows else None
 
-    def committed(self, run_id: str, stage: str) -> bool:
-        return self.stage_commit(run_id, stage) is not None
-
     def committed_partitions(self, run_id: str, stage: str) -> set[str]:
         return {
             e["partition"]
@@ -91,11 +88,31 @@ class StageStore:
     def _path(self, stage: str) -> str:
         return str(self.root / self.run_id / stage)
 
+    def _schema(self, stage: str) -> T.StructType | None:
+        """The read schema the stage's commit row records, or None when
+        the stage is not committed. A commit row without a schema counts
+        as uncommitted: the stage re-runs rather than being read back
+        with inferred partition types."""
+        row = self.manifest.stage_commit(self.run_id, stage)
+        if row is None or "schema" not in row:
+            return None
+        return T.StructType.fromJson(row["schema"])
+
     def is_done(self, stage: str) -> bool:
-        return self.manifest.committed(self.run_id, stage)
+        return self._schema(stage) is not None
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(stage))
+        """A committed stage, read with the schema its commit recorded:
+        the frame's own schema, partition columns last (the order
+        partition discovery gives). No schema-inference job runs, and
+        partition values keep their computed type, so a resumed stage
+        reads back exactly like the run that wrote it. An empty stage
+        may have no directory; it reads as 0 rows."""
+        schema = self._schema(stage)
+        if schema is None:
+            raise ValueError(f"stage {stage!r} of run {self.run_id!r} is not committed")
+        Path(self._path(stage)).mkdir(parents=True, exist_ok=True)
+        return self.spark.read.schema(schema).parquet(self._path(stage))
 
     def materialize(self, stage: str, df_fn, partition_by: list[str] | None = None) -> DataFrame:
         """Run df_fn() and commit unless already committed (resume).
@@ -104,9 +121,9 @@ class StageStore:
         contract): row counts per partition value for partitioned
         writes, else per output file — enough to audit which partition
         a row came from and re-verify any single partition. The counts
-        come from the written files' parquet footers and the stage is
-        read back with the frame's own schema, so the write is the
-        call's only Spark job."""
+        come from the written files' parquet footers and the row records
+        the read schema ``read`` uses, so the write is the call's only
+        Spark job."""
         if self.is_done(stage):
             return self.read(stage)
         t0 = time.time()
@@ -119,19 +136,10 @@ class StageStore:
         lineage = _footer_rows(Path(path), partition_by or [])
         self.manifest.commit(
             self.run_id, stage, sum(lineage.values()), (time.time() - t0) * 1000,
-            extra={"partitions": lineage},
+            extra={"partitions": lineage,
+                   "schema": _read_schema(df, partition_by or []).jsonValue()},
         )
-        return self._read_as(df, stage, partition_by or [])
-
-    def _read_as(self, df: DataFrame, stage: str, partition_by: list[str]) -> DataFrame:
-        """Read a written stage with ``df``'s schema, partition columns
-        last (the order partition discovery gives): no schema-inference
-        job, and partition values keep their computed type. An empty
-        stage may have no directory; it reads as 0 rows."""
-        Path(self._path(stage)).mkdir(parents=True, exist_ok=True)
-        fields = [f for f in df.schema.fields if f.name not in partition_by]
-        schema = T.StructType(fields + [df.schema[c] for c in partition_by])
-        return self.spark.read.schema(schema).parquet(self._path(stage))
+        return self.read(stage)
 
     def materialize_by_partition(self, stage: str, df_fn, partition_col: str) -> DataFrame:
         """Partition-granular resumable write (ref stage-cache semantics
@@ -187,13 +195,19 @@ class StageStore:
                 self.run_id, stage, n, (time.time() - tp) * 1000,
                 extra={"partition": v},
             )
-        out = self._read_as(df, stage, [partition_col])
         self.manifest.commit(
             self.run_id, stage, sum(_footer_rows(Path(self._path(stage)), []).values()),
             (time.time() - t0) * 1000,
-            extra={"partitions": {v: None for v in values}},
+            extra={"partitions": {v: None for v in values},
+                   "schema": _read_schema(df, [partition_col]).jsonValue()},
         )
-        return out
+        return self.read(stage)
+
+
+def _read_schema(df: DataFrame, partition_by: list[str]) -> T.StructType:
+    """``df``'s schema with the partition columns moved last."""
+    fields = [f for f in df.schema.fields if f.name not in partition_by]
+    return T.StructType(fields + [df.schema[c] for c in partition_by])
 
 
 _HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"

@@ -1,22 +1,22 @@
-"""Incremental ingest via Structured Streaming (the streaming
-counterpart of the batch resume-from-manifest path).
+"""Incremental ingest: new document files fold into the mentions,
+the triples and the graph without reprocessing what came before.
 
 The reference has no streaming surface (SURVEY.md §2.6): its
-"incremental" story is pickle-stage resume. The Spark-native analogue
-for continuously arriving document files is an `availableNow` stream:
-each trigger processes only files not yet recorded in the checkpoint,
-runs the SAME extraction operators, and appends mentions exactly-once
-(file-source checkpoint + idempotent sink path).
+"incremental" story is pickle-stage resume. Here three drivers pick up
+only the files not yet processed:
 
-    run_incremental_extraction(spark, input_dir, output_dir, checkpoint_dir)
+- ``run_incremental_batch``: new document files -> mentions, with a
+  JSON file manifest as the commit log (no trigger machinery);
+- ``run_incremental_triples``: an ``availableNow`` stream of new
+  document files -> per-batch triple tables, which ``fold_graph``
+  merges into the graph;
+- ``run_streaming_near_dedup``: an ``availableNow`` stream of
+  (doc_id, text) files folded into durable MinHash-LSH near-dup state.
 
-processes whatever is new and returns; calling it again after more
-files land picks up only the delta — no reprocessing, mirroring the
-manifest semantics at file granularity.
-
-Exactly-once: foreachBatch alone is at-least-once (a crash between the
-sink write and the checkpoint commit replays the batch), so the sink
-writes each batch to a batch_id-scoped subdirectory with OVERWRITE —
+Exactly-once: a stream's foreachBatch alone is at-least-once (a crash
+between the sink write and the checkpoint commit replays the batch),
+and so is a manifest written after its output. Every sink therefore
+writes each batch to a batch-scoped subdirectory with OVERWRITE —
 a replayed batch rewrites the same directory instead of appending
 duplicates, making the write idempotent and the end-to-end result
 exactly-once. Readers consume ``output_dir/batch_id=*`` as one
@@ -80,25 +80,6 @@ def _batch_ids(root: Path) -> list[int]:
     return sorted(int(p.name.split("=")[1]) for p in root.glob("batch_id=*") if p.is_dir())
 
 
-def run_incremental_extraction(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    surfaces: tuple[str, ...],
-    timeout_sec: int = 300,
-) -> None:
-    """availableNow stream: new document parquet files → mentions table."""
-
-    def _process(batch_df, batch_id: int) -> None:
-        mentions, _, _ = _extract_delta(batch_df, batch_df.rdd.getNumPartitions(), surfaces)
-        # idempotent per batch: overwrite the batch-scoped directory so
-        # a checkpoint-replayed batch cannot duplicate rows
-        mentions.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
-
-    _run_available_now(spark, input_dir, checkpoint_dir, _process, timeout_sec)
-
-
 def run_incremental_batch(
     spark: SparkSession,
     input_dir: str,
@@ -109,11 +90,11 @@ def run_incremental_batch(
     """File-granular incremental extraction WITHOUT the streaming
     trigger machinery. Returns the number of new files processed.
 
-    The availableNow stream above pays ~1 s of fixed per-trigger
-    bookkeeping (query construction, offset/commit WAL, microbatch
-    scheduling) regardless of delta size — measured as the whole cost
-    of a small delta at 80k docs. For callers that poll on their own
-    cadence, the same exactly-once contract needs only a file manifest:
+    An availableNow stream pays ~1 s of fixed per-trigger bookkeeping
+    (query construction, offset/commit WAL, microbatch scheduling)
+    regardless of delta size — measured as the whole cost of a small
+    delta at 80k docs. For callers that poll on their own cadence, the
+    exactly-once contract needs only a file manifest:
 
     - the manifest (one JSON: processed files + batch counter) is the
       commit log; new files = listing minus manifest;
@@ -121,7 +102,7 @@ def run_incremental_batch(
       and the manifest is written only AFTER the output commit — a
       crash in between replays the same files into the same directory,
       so the replay is idempotent and the end state exactly-once
-      (identical argument to the stream's foreachBatch sink).
+      (identical argument to the streams' foreachBatch sinks).
 
     Scale note: one flat JSON manifest is right up to ~10^5 files; past
     that, segment it per batch and compact like the file-stream
@@ -157,7 +138,7 @@ def run_incremental_triples(
     Triple extraction is per-document (E4 scans sentences of one doc),
     so batch boundaries cannot change WHAT is extracted — only how the
     rows are grouped into batch directories. The same batch_id-scoped
-    OVERWRITE used by run_incremental_extraction makes replays
+    OVERWRITE used by run_incremental_batch makes replays
     idempotent; ``fold_graph`` below turns the directories into the
     merged ontology graph.
     """

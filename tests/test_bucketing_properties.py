@@ -1,5 +1,6 @@
-"""Bucketed co-located joins + hypothesis property tests for the shared
-rule set (SURVEY §5: the reference has no property tests; we add them)."""
+"""Hypothesis property tests for the shared rule set (SURVEY §5: the
+reference has no property tests; we add them), plus the incremental
+connected-components fold against a full recompute."""
 
 from __future__ import annotations
 
@@ -64,25 +65,6 @@ def test_embedding_unit_norm_or_zero(t):
     assert abs(norm2 - 1.0) < 1e-9 or norm2 == 0.0
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    from ontology_learning_spark.sources.bucketing import (
-        bucketed_join_is_shuffle_free,
-        write_bucketed,
-    )
-
-    left = spark.range(1000).selectExpr("id as k", "id * 2 as v")
-    right = spark.range(1000).selectExpr("id as k", "id * 3 as w")
-    try:
-        write_bucketed(left, "bt_left", "k", n_buckets=8, sort_col="k")
-        write_bucketed(right, "bt_right", "k", n_buckets=8, sort_col="k")
-        df, shuffle_free = bucketed_join_is_shuffle_free(spark, "bt_left", "bt_right", "k")
-        assert shuffle_free, "bucketed equi-join must not exchange"
-        assert df.count() == 1000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bt_left")
-        spark.sql("DROP TABLE IF EXISTS bt_right")
-
-
 def test_incremental_components_equals_full_recompute(spark):
     """incremental_components(CC(base), delta) must be row-identical to
     CC(base ∪ delta) — merges across existing components, brand-new
@@ -117,43 +99,3 @@ def test_incremental_components_equals_full_recompute(spark):
     inc2 = {tuple(r) for r in CC.incremental_components(
         base_cc, ddf, small_threshold=0).collect()}
     assert inc2 == full
-
-
-def test_bucketed_cc_equivalence_and_edge_side_no_exchange(spark):
-    """connected_components_bucketed must (a) return the same
-    components as the checkpoint-based loop and (b) actually deliver
-    the claimed plan: the bucketed corpus-scale edge side of the
-    per-round join carries NO exchange — only the node-sized labels
-    side shuffles."""
-    from pyspark.sql import functions as F
-
-    from ontology_learning_spark.operators import canonicalize as CC
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"),
-         ("hub", "p1"), ("hub", "p2"), ("hub", "p3")],
-        "src string, dst string",
-    )
-    try:
-        base = {tuple(r) for r in CC.connected_components(edges).collect()}
-        buck = {tuple(r) for r in CC.connected_components_bucketed(
-            edges, n_buckets=8, table="cc_bt_test").collect()}
-        assert base == buck
-
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            e = spark.table("cc_bt_test")
-            labels = (
-                e.select(F.col("src").alias("node"))
-                .union(e.select(F.col("dst").alias("node")))
-                .distinct().withColumn("component", F.col("node"))
-            ).localCheckpoint()
-            j = e.join(labels.withColumnRenamed("node", "dst"), "dst")
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "Bucketed: true" in plan
-            assert plan.count("Exchange hashpartitioning") == 1, plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS cc_bt_test")

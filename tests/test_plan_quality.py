@@ -132,23 +132,29 @@ def test_validity_filter_is_catalyst(spark):
 def test_top_docs_window_group_limit_and_equivalence(spark):
     """The shipped E7 top-N plan must carry a PARTIAL WindowGroupLimit
     below the exchange (map-side top-n prune per concept — what makes
-    the single window skew-proof on head concepts), and the legacy
-    salted two-phase variant must return identical rows."""
+    the single window skew-proof on head concepts), and return, per
+    concept, the n smallest distinct doc ids numbered 1..n."""
     from ontology_learning_spark.operators import enrich as EN
 
     rows = [(f"d{i:04d}", "hot") for i in range(400)] * 3 + [
         (f"d{i:04d}", f"tail{i % 17}") for i in range(60)
     ]
     m = spark.createDataFrame(rows, "doc_id string, norm_surface string")
+    top = EN.top_docs_per_concept(m)
 
-    plan = _plan(EN.top_docs_per_concept(m, salted=False))
+    plan = _plan(top)
     i_partial = plan.find("WindowGroupLimit")
     assert i_partial != -1, "rank-limit filter did not rewrite to WindowGroupLimit"
     assert "Partial" in plan, "map-side (Partial) WindowGroupLimit pass missing"
 
-    a = sorted(map(tuple, EN.top_docs_per_concept(m, salted=False).collect()))
-    b = sorted(map(tuple, EN.top_docs_per_concept(m, salted=True).collect()))
-    assert a == b
+    docs: dict[str, set[str]] = {}
+    for r in m.collect():
+        docs.setdefault(r["norm_surface"], set()).add(r["doc_id"])
+    want = sorted(
+        (c, d, rn) for c, ds in docs.items()
+        for rn, d in enumerate(sorted(ds)[:EN.CONTEXT_CHUNKS], start=1)
+    )
+    assert sorted(map(tuple, top.collect())) == want
 
 
 def test_parquet_checkpoint_equivalence_pruning_and_empty(spark, monkeypatch):

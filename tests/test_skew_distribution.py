@@ -1,55 +1,8 @@
-"""Skew evidence (north_rule): salting must actually spread a hot key
-across partitions, and AQE skew-join must be on in the session."""
+"""Skew handling (north_rule): AQE skew-join must be on in the session
+(the E7 window's map-side prune is pinned in test_plan_quality). Also
+the threshold-config comparison over the shared gold set."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from ontology_learning_spark.functions import skew as SK
-
-
-def test_salted_join_spreads_hot_key(spark):
-    big = spark.createDataFrame([("hot", i) for i in range(4000)], "k string, v int")
-    small = spark.createDataFrame([("hot", 1)], "k string, w int")
-
-    # AQE's partition coalescing would merge the tiny test output back
-    # into one partition and hide the spread we're asserting — and if
-    # the 8-row exploded small side converts to a BROADCAST join (static
-    # or AQE runtime), the output inherits the big side's incidental
-    # input partitioning and the assertion measures createDataFrame
-    # slicing, not salting. Salting only matters when the dimension
-    # side can NOT broadcast, so pin that regime explicitly.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        old_abc = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    except Exception:
-        old_abc = None  # unset (falls back to the non-adaptive threshold)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        plain = big.join(small.hint("shuffle_hash"), "k")
-        plain_parts = (
-            plain.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid").count().count()
-        )
-
-        salted = SK.salted_join(big, small, "k", salt_factor=8)
-        salted_parts = (
-            salted.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid").count().count()
-        )
-        assert salted_parts > plain_parts, (
-            f"salting must spread the hot key: plain={plain_parts} salted={salted_parts}"
-        )
-        assert salted.count() == plain.count() == 4000
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-        if old_abc is not None:
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_abc)
-        else:
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
 def test_aqe_skew_join_enabled(spark):

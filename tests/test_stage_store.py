@@ -1,5 +1,6 @@
-"""StageStore lineage, empty stages and per-call job counts (S4, S12),
-plus the session's generated-code cache across repeated pipeline runs.
+"""StageStore lineage, empty stages, resumed-stage schemas and per-call
+job counts (S4, S12), plus the session's generated-code cache across
+repeated pipeline runs.
 
 The manifest's per-file / per-partition row counts come from parquet
 footers; the oracle here is a Spark aggregation over the read-back
@@ -116,6 +117,34 @@ def test_empty_stage_is_readable(spark, tmp_path, how):
     row = _stage_row(store, "empty")
     assert row["rows"] == 0
     assert store.is_done("empty")
+
+
+@pytest.mark.parametrize("how", ["partitioned", "by_partition"])
+def test_resumed_stage_reads_like_fresh(spark, tmp_path, how):
+    """A resumed stage keeps the partition types of the run that wrote
+    it: string values ``007`` and ``12`` do not come back as int 7 and
+    12. A stage row that records no read schema is not a commit."""
+    df = spark.createDataFrame([(1, "007"), (2, "12")], "x int, p string")
+    calls = []
+
+    def run(store):
+        def df_fn():
+            calls.append(1)
+            return df
+        if how == "partitioned":
+            return store.materialize("s", df_fn, partition_by=["p"])
+        return store.materialize_by_partition("s", df_fn, "p")
+
+    store = StageStore(spark, tmp_path, "r1")
+    store.manifest.commit("r1", "s", 2, 0.0)        # a stage row with no schema
+    assert not store.is_done("s")
+    fresh = run(store)
+    resumed = run(StageStore(spark, tmp_path, "r1"))
+    assert len(calls) == 1                          # the second call read back
+    for out in (fresh, resumed):
+        assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+            ("x", "int"), ("p", "string")]
+        assert sorted(tuple(r) for r in out.collect()) == [(1, "007"), (2, "12")]
 
 
 def test_materialize_runs_one_job(spark, tmp_path):

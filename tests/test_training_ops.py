@@ -75,10 +75,11 @@ def test_brute_force_topk(emb_df):
 
 
 def test_lsh_topk_recalls_near_neighbor(emb_df):
+    """The ANN behind the ``emb_lsh_topk`` query on a second input: 20
+    random 8-d vectors, one planted near-dup of vector 0."""
     q = [float(x) for x in emb_df.where("vec_id = 0").first()["embedding"]]
-    top = SS.lsh_topk(emb_df, q, k=3, n_planes=8, multiprobe_bits=1).collect()
-    ids = [r["vec_id"] for r in top]
-    assert 0 in ids and 1 in ids
+    got = [r["vec_id"] for r in SS.lsh_banded_topk(emb_df, q, k=2).collect()]
+    assert got == [0, 1]  # itself, then its planted near-dup
 
 
 def test_embedding_near_dups(emb_df):
@@ -324,14 +325,16 @@ def test_decode_media_header_real_formats():
     assert MM.decode_media_header(b"\xff\xd8\xff\xd9") is None
 
 
-def test_incremental_dedup_state(spark):
-    """dedup_state_init + dedup_state_update over a base/delta split
-    must produce the same mapping and clusters as the one-shot pipeline
-    over the whole corpus — cross-split dups, intra-delta dups, and
-    no-dup delta docs included."""
+def test_incremental_dedup_state(spark, tmp_path):
+    """run_streaming_near_dedup over a base file then a delta file must
+    produce the same mapping and clusters as the one-shot pipeline over
+    the whole corpus — cross-split dups, intra-delta dups, and no-dup
+    delta docs included."""
     import random
+    from pathlib import Path
 
     from ontology_learning_spark.operators.canonicalize import connected_components
+    from ontology_learning_spark.streaming.incremental import run_streaming_near_dedup
 
     rng = random.Random(9)
     words = [f"w{i}" for i in range(50)]
@@ -339,36 +342,43 @@ def test_incremental_dedup_state(spark):
     def mk():
         return " ".join(rng.choice(words) for _ in range(30))
 
-    rows = [(i, mk()) for i in range(90)]
-    rows[10] = (10, rows[0][1])                      # base cluster {0,10}
-    rows[11] = (11, rows[1][1])                      # base cluster {1,11}
+    rows = [(str(i), mk()) for i in range(90)]
+    rows[10] = ("10", rows[0][1])                    # base cluster {0,10}
+    rows[11] = ("11", rows[1][1])                    # base cluster {1,11}
     tweak = rows[1][1].split(); tweak[0] = "zz"
     delta = [
-        (90, rows[0][1]),                            # grows {0,10}
-        (91, " ".join(tweak)),                       # near-dup grows {1,11}
-        (92, mk()),
-        (94, mk()),                                  # no dup
+        ("90", rows[0][1]),                          # grows {0,10}
+        ("91", " ".join(tweak)),                     # near-dup grows {1,11}
+        ("92", mk()),
+        ("94", mk()),                                # no dup
     ]
-    delta.append((93, delta[2][1]))                  # intra-delta cluster {92,93}
+    delta.append(("93", delta[2][1]))                # intra-delta cluster {92,93}
 
-    base_df = spark.createDataFrame(rows, "doc_id long, text string")
-    delta_df = spark.createDataFrame(delta, "doc_id long, text string")
-    all_df = base_df.unionByName(delta_df)
+    in_dir, state = str(tmp_path / "in"), str(tmp_path / "state")
+    for part in (rows, delta):                       # one file each: base, then delta
+        spark.createDataFrame(part, "doc_id string, text string") \
+            .coalesce(1).write.mode("append").parquet(in_dir)
+    run_streaming_near_dedup(spark, in_dir, state, str(tmp_path / "ckpt"),
+                             threshold=0.5, max_files_per_trigger=1)
 
-    st = DD.dedup_state_init(base_df, threshold=0.5)
-    st = DD.dedup_state_update(st, delta_df, all_df, threshold=0.5)
+    versions = sorted(p.name for p in (Path(state) / "mapping").glob("v*"))
+    assert versions == ["v0", "v1"]
+    mapping = spark.read.parquet(f"{state}/mapping/v1")
 
+    all_df = spark.createDataFrame(rows + delta, "doc_id string, text string")
     full_pairs = DD.ngram_jaccard_pairs(all_df, threshold=0.5)
     full = connected_components(
         full_pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
-    assert {tuple(r) for r in st.mapping.collect()} == {tuple(r) for r in full.collect()}
+    assert {tuple(r) for r in mapping.collect()} == {tuple(r) for r in full.collect()}
 
-    clusters = {r["canonical_id"]: r["cluster_size"]
-                for r in DD.dedup_state_clusters(st).collect()}
-    assert clusters == {0: 3, 1: 3, 92: 2}
+    clusters = {r["component"]: r["count"]
+                for r in mapping.groupBy("component").count().collect()}
+    assert clusters == {"0": 3, "1": 3, "92": 2}
     # the band table covers every ingested doc exactly once per band
-    per_doc = st.bands.groupBy("id").count().select("count").distinct().collect()
+    bands = spark.read.parquet(f"{state}/bands")
+    assert bands.select("id").distinct().count() == 95
+    per_doc = bands.groupBy("id").count().select("count").distinct().collect()
     assert len(per_doc) == 1
 
 
@@ -408,28 +418,3 @@ def test_repetition_ratio(spark):
     assert rep[2] == 0.0 and rep[3] == 0.0
     assert rep[1] == round(1 - 3 / 7, 6)
     assert rep[4] == round(1 - 1 / 3, 6)  # 3 grams, all "spam spam spam"
-
-
-def test_dedup_state_save_load_roundtrip(spark, tmp_path):
-    """A restart between init and the delta fold must not change the
-    result: save → load → update ≡ in-session update ≡ one-shot."""
-    from ontology_learning_spark.operators.canonicalize import connected_components
-
-    rows = [(i, f"alpha beta gamma delta epsilon zeta eta theta doc{i} iota kappa")
-            for i in range(20)]
-    rows[5] = (5, rows[0][1])
-    base_df = spark.createDataFrame(rows, "doc_id long, text string")
-    delta = [(20, rows[1][1]), (21, "nothing shared here at all with anything else ok")]
-    delta_df = spark.createDataFrame(delta, "doc_id long, text string")
-    all_df = base_df.unionByName(delta_df)
-
-    st = DD.dedup_state_init(base_df, threshold=0.9)
-    DD.dedup_state_save(st, str(tmp_path / "state"))
-    st2 = DD.dedup_state_load(spark, str(tmp_path / "state"))
-    out = DD.dedup_state_update(st2, delta_df, all_df, threshold=0.9)
-
-    full = connected_components(
-        DD.ngram_jaccard_pairs(all_df, threshold=0.9)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    assert {tuple(r) for r in out.mapping.collect()} == {tuple(r) for r in full.collect()}
