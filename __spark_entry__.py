@@ -1238,12 +1238,13 @@ _AUG_SQL = f"""
 
 def _q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidates → exact Jaccard verify at threshold 0.9 —
-    the threshold the LSH recall argument actually covers: per-pair
-    miss probability at 8 bands of r=4 is (1-0.9^4)^8 ~ 2e-4 for
-    J>=0.9 (verified: 25/25 found), whereas a J in [0.5, 0.9) pair
-    could be missed with probability up to ~0.6, which would make an
-    exact-twin oracle flaky if the corpus generator ever introduced
-    mid-band pairs. Threshold raised from 0.5 per round-2 review."""
+    the threshold the LSH recall argument actually covers: at
+    ``minhash_plan(0.9)`` (10 bands of r=9) the per-pair miss
+    probability is (1-0.9^9)^10 ~ 0.0075 at J=0.9 and falls fast
+    above it, whereas a J in [0.5, 0.9) pair is missed with
+    probability up to ~0.98, which would make an exact-twin oracle
+    flaky if the corpus generator ever introduced mid-band pairs.
+    Threshold raised from 0.5 per round-2 review."""
     from ontology_learning_spark.operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(_docs(spark, sf_dir, spread=True), threshold=0.9).select(
@@ -1252,9 +1253,10 @@ def _q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dups. The 4x16-bit pigeonhole blocking is EXACT for
-    hamming<=3 (recall 1 by construction), so the oracle recomputes the
-    md5-based simhash bit-for-bit in SQL and brute-force joins."""
+    """SimHash near-dups. The pigeonhole blocking (block count from
+    ``pick_simhash_blocks`` on the corpus size) is EXACT for hamming<=3
+    (recall 1 by construction), so the oracle recomputes the md5-based
+    simhash bit-for-bit in SQL and brute-force joins."""
     from ontology_learning_spark.operators.dedup import simhash_near_dups
 
     # n_docs from the raw scan (parquet-footer count, no shuffle) so the

@@ -75,9 +75,9 @@ def _singularize_token_col(tok: Column) -> Column:
         branch = F.when(tok == plural, F.lit(singular))
         irregular = branch if irregular is None else irregular.when(tok == plural, F.lit(singular))
 
-    keep = tok.endswith("ss") | (F.length(tok) < 4)
+    keep = tok.isin(*sorted(S._SINGULAR_FORMS)) | tok.endswith("ss") | (F.length(tok) < 4)
     ies = tok.rlike(r"^.*[^aeiou]ies$")
-    es = tok.rlike(r"^.*(s|x|z|ch|sh)es$")
+    es = tok.rlike(r"^.*(ss|x|z|ch|sh)es$")
     plain_s = tok.rlike(r"^.*[^s]s$")
 
     ruled = (

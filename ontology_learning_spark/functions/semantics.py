@@ -113,28 +113,31 @@ _IRREGULAR_SINGULAR = {
     "species": "species",
 }
 
+# Irregular singulars are kept as they are ('axis' must not become 'axi').
+_SINGULAR_FORMS = frozenset(_IRREGULAR_SINGULAR.values())
+
 # Deterministic English plural→singular suffix rules, applied to the
 # LAST whitespace token (multi-word concepts pluralize their head noun).
+# Every output is a fixed point: it ends in 'y', 'ss', 'x', 'z', 'ch',
+# 'sh' or a non-'s' letter, so singularizing twice changes nothing.
+# '-ses' therefore only drops 'es' after 'ss' (classes -> class); other
+# '-ses' words drop the 's' (licenses -> license, not 'licens' -> 'licen').
 _SINGULAR_RULES: list[tuple[re.Pattern[str], str]] = [
-    (re.compile(r"(.*[^aeiou])ies$"), r"\1y"),      # capacities -> capacity
-    (re.compile(r"(.*(?:s|x|z|ch|sh))es$"), r"\1"),  # switches -> switch
-    (re.compile(r"(.*[aeiou]ses)$"), r"\1"),         # guard: handled above
-    (re.compile(r"(.*[^s])s$"), r"\1"),              # resistors -> resistor
+    (re.compile(r"(.*[^aeiou])ies$"), r"\1y"),       # capacities -> capacity
+    (re.compile(r"(.*(?:ss|x|z|ch|sh))es$"), r"\1"),  # switches -> switch
+    (re.compile(r"(.*[^s])s$"), r"\1"),               # resistors -> resistor
 ]
 
 
 def _singularize_token(tok: str) -> str:
     if tok in _IRREGULAR_SINGULAR:
         return _IRREGULAR_SINGULAR[tok]
-    if tok.endswith("ss") or len(tok) < 4:  # 'class', 'bus' via irregulars; short tokens untouched
+    # 'class', 'axis', 'bus' and short tokens untouched
+    if tok in _SINGULAR_FORMS or tok.endswith("ss") or len(tok) < 4:
         return tok
-    for rx, repl in _SINGULAR_RULES[:2]:
-        m = rx.match(tok)
-        if m:
+    for rx, repl in _SINGULAR_RULES:
+        if rx.match(tok):
             return rx.sub(repl, tok)
-    m = _SINGULAR_RULES[3][0].match(tok)
-    if m:
-        return _SINGULAR_RULES[3][0].sub(_SINGULAR_RULES[3][1], tok)
     return tok
 
 

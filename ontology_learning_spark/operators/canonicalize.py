@@ -1,13 +1,14 @@
 """Canonicalization (SURVEY.md M13): connected components over alias
-edges as an iterative DataFrame join loop — no RDDs, no per-row Python.
+edges — a driver union-find for vocabulary-sized alias sets, an
+iterative DataFrame min-label loop above that; no RDDs, no per-row
+Python.
 
 The reference's canonicalization is a single-hop sameAs mapping plus
 MERGE-by-name idempotency; the north star requires the general case:
 alias chains and hubs resolved to a canonical label via union-find
-semantics. We run the alternating large-star / small-star algorithm
-(Kiveris et al., "Connected Components in MapReduce and Beyond") —
-each iteration is two self-joins + aggregations, converging in
-O(log^2 n) rounds; every step is shuffle-on-key, skew handled by AQE.
+semantics. The distributed loop is min-label propagation: each round is
+one labels-onto-edges join and one aggregation, and it runs to its
+fixed point, which takes as many rounds as the graph's diameter.
 
 Driver-side loop hygiene for scale: `localCheckpoint` every iteration
 cuts the lineage chain (else the plan doubles per round), and
@@ -26,47 +27,44 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     ).where(F.col("src") != F.col("dst")).distinct()
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-    small_threshold: int = 200_000,
-) -> DataFrame:
-    """Return (node, component) where component = min node id (string
-    ordering) in the node's connected component.
+# Edge count at or below which components come from one collected
+# probe and a driver union-find; above it the distributed min-label loop
+# runs. Read at call time, so a test can set it to 0 to run the loop.
+_DRIVER_CC_MAX_EDGES = 200_000
 
-    Hybrid plan (same pattern as ``canonical_mapping`` /
-    ``incremental_components``): below ``small_threshold`` edges the
-    pairs are collected by a bounded ``limit(k+1)`` probe and resolved
-    with the exact driver union-find ``_uf_min_labels`` — identical
-    min-label semantics, zero iterative rounds. Near-dup pair sets are
-    typically orders of magnitude smaller than the corpus, and each
-    distributed round costs 2 exchanges + a checkpoint + a count job,
-    which dominates wall time for small graphs (measured ~3 s of the
-    9.6 s dedup_clusters wall at 50k docs for a 2.5k-pair graph).
-    Above the threshold, the distributed min-label propagation loop
-    runs as before.
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(src, dst) edges → (node, component) where component = min node
+    id (string ordering) in the node's connected component.
+
+    Hybrid plan (``canonical_mapping`` makes the same choice): at most
+    ``_DRIVER_CC_MAX_EDGES`` edges are collected by a bounded
+    ``limit(k+1)`` probe and resolved with the exact driver union-find
+    ``_uf_min_labels`` — identical min-label semantics, zero iterative
+    rounds. Near-dup pair sets are typically orders of magnitude
+    smaller than the corpus, and each distributed round costs 2
+    exchanges + a checkpoint + a count job, which dominates wall time
+    for small graphs (measured ~3 s of the 9.6 s dedup_clusters wall at
+    50k docs for a 2.5k-pair graph). Above the cap, the distributed
+    min-label propagation loop runs.
 
     Implementation (large path): iterated min-label propagation over
     the symmetric edge set (a simple, robustly correct variant of star
     contraction: each round every node adopts the min of its own label
-    and its neighbours' labels; converges in diameter rounds, which is
-    small for alias graphs — chains are short, hubs are depth-1).
+    and its neighbours' labels). It runs until no label changes, which
+    takes as many rounds as the graph's diameter; it always stops,
+    because a label only ever decreases within a finite node set.
     """
-    e0 = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-    )
-    probe = e0.limit(small_threshold + 1).collect()
-    if len(probe) <= small_threshold:
+    cap = _DRIVER_CC_MAX_EDGES
+    e0 = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
+    probe = e0.limit(cap + 1).collect()
+    if len(probe) <= cap:
         merged = _uf_min_labels([(r["src"], r["dst"]) for r in probe])
-        ntype = edges.schema[src].dataType.simpleString()
-        spark = edges.sparkSession
+        ntype = edges.schema["src"].dataType.simpleString()
         # UTF-8 byte order == code-point order, so the Python min-label
         # matches Spark's string ordering exactly; numeric ids compare
         # identically too.
-        return spark.createDataFrame(
+        return edges.sparkSession.createDataFrame(
             sorted(merged.items()), schema=f"node {ntype}, component {ntype}"
         )
     # Shuffle budget per round: the labels-onto-edges join exchanges
@@ -80,8 +78,7 @@ def connected_components(
     # the label update below (a _changed flag on the frame we pin
     # anyway) — the old separate new-vs-old join cost a third join +
     # two more exchanges + an extra pass per round.
-    e = _symmetrize(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    e = e.localCheckpoint()
+    e = _symmetrize(edges.select("src", "dst")).localCheckpoint()
     labels = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -89,7 +86,7 @@ def connected_components(
         .withColumn("component", F.col("node"))
     ).localCheckpoint()
 
-    for _ in range(max_iter):
+    while True:
         # neighbour min-label: join labels onto edge dst, aggregate
         # min per src (the message exchange of label propagation)
         neigh = (
@@ -116,9 +113,7 @@ def connected_components(
         changed = new_labels.where("_changed").count()
         labels = new_labels.drop("_changed")
         if changed == 0:
-            break
-
-    return labels
+            return labels
 
 
 def _uf_min_labels(pairs: list[tuple[str, str]]) -> dict[str, str]:
@@ -144,17 +139,12 @@ def _uf_min_labels(pairs: list[tuple[str, str]]) -> dict[str, str]:
     return {x: find(x) for x in parent}
 
 
-def incremental_components(
-    components: DataFrame,
-    new_edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    small_threshold: int = 200_000,
-) -> DataFrame:
-    """Fold a DELTA of new alias edges into an existing (node, component)
-    mapping without re-running CC over the historical edge set — the
-    daily-delta path at corpus scale, where the accumulated alias graph
-    is 10^9+ edges but a batch touches a few thousand components.
+def incremental_components(components: DataFrame, new_edges: DataFrame) -> DataFrame:
+    """Fold a DELTA of new (src, dst) alias edges into an existing
+    (node, component) mapping without re-running CC over the historical
+    edge set — the daily-delta path at corpus scale, where the
+    accumulated alias graph is 10^9+ edges but a batch touches a few
+    thousand components.
 
     Equivalence (pytest-pinned): the result is identical to
     ``connected_components(old_edges ∪ new_edges)`` for any old edge set
@@ -165,23 +155,21 @@ def incremental_components(
     the min of its component and new nodes enter as their own labels.
 
     Cost: one broadcast join of the delta endpoints onto the mapping,
-    a CC over the CONTRACTED component graph (≤ 2·|delta| nodes —
-    driver union-find below ``small_threshold`` contracted edges, the
-    distributed min-label loop above), then one broadcast-remap pass
-    over the mapping. The full-mapping pass is the floor for producing
-    the complete updated table; a partitioned sink would overwrite only
+    ``connected_components`` over the CONTRACTED component graph
+    (≤ 2·|delta| nodes), then one broadcast-remap pass over the
+    mapping. The full-mapping pass is the floor for producing the
+    complete updated table; a partitioned sink would overwrite only
     the affected component partitions instead.
     """
     from ..functions.persistence import materialize
 
-    spark = components.sparkSession
     # Pin the delta edges ONCE: endpoints, the contracted graph, and
     # the remap all consume this frame, and the caller's edge chain is
     # often expensive (e.g. an LSH verify) — unpinned, every action
     # below re-executes it (measured 15.1 s → 2.8 s of the 320k-doc
     # incremental-dedup fold).
     e = materialize(
-        new_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        new_edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -210,61 +198,51 @@ def incremental_components(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    probe = contracted.limit(small_threshold + 1).collect()
-    if len(probe) <= small_threshold:
-        merged = _uf_min_labels([(r["src"], r["dst"]) for r in probe])
-    else:
-        merged = {
-            r["node"]: r["component"]
-            for r in connected_components(contracted).collect()
-        }
-    remap = [(old, new) for old, new in merged.items() if old != new]
-
-    # new-node rows enter with their (possibly remapped) label
-    new_rows = misses
-    if not remap:
-        return components.unionByName(new_rows)
-    import pandas as pd
-
-    # label dtype follows the mapping's (ids may be bigint, not string)
-    ctype = components.schema["component"].dataType.simpleString()
-    remap_df = spark.createDataFrame(
-        pd.DataFrame(sorted(remap), columns=["component", "_new"]),
-        schema=f"component {ctype}, _new {ctype}",
+    # old label → merged label, for the labels the delta merged
+    remap = (
+        connected_components(contracted)
+        .where(F.col("node") != F.col("component"))
+        .select(F.col("node").alias("component"), F.col("component").alias("_new"))
     )
+    # new-node rows enter with their (possibly remapped) label
     return (
-        components.unionByName(new_rows)
-        .join(F.broadcast(remap_df), "component", "left")
+        components.unionByName(misses)
+        .join(F.broadcast(remap), "component", "left")
         .select("node", F.coalesce("_new", "component").alias("component"))
     )
 
 
-SMALL_ALIAS_THRESHOLD = 200_000
-
-
-def canonical_mapping(alias_edges: DataFrame, small_threshold: int = SMALL_ALIAS_THRESHOLD) -> DataFrame:
+def canonical_mapping(alias_edges: DataFrame) -> DataFrame:
     """alias_edges(surface, alias_of) → (surface, canonical) resolving
-    chains/hubs; canonical = sink-preferring representative.
+    chains/hubs; canonical = the component's min sink (an ``alias_of``
+    never seen as a ``surface``), else its min node.
 
     Hybrid plan: the alias set is vocabulary-sized, usually tiny
-    relative to the corpus — below `small_threshold` edges we collect
-    and run an exact driver-side union-find (identical code to the test
-    oracle), skipping ~4 iterations x 3 shuffles of fixed overhead.
-    Above it, the iterative min-label DataFrame loop runs distributed.
+    relative to the corpus — at most ``_DRIVER_CC_MAX_EDGES`` edges are
+    collected and resolved by the driver union-find ``_uf_min_labels``,
+    skipping ~4 iterations x 3 shuffles of fixed overhead. Above it,
+    the iterative min-label DataFrame loop runs distributed. Both paths
+    pick the representative by the same sink rule.
     """
-    # Self-edges out FIRST so both paths share one contract: the
-    # distributed path derives sink representatives from the surface
-    # set, and a (x, x) edge would wrongly demote x from sink status
-    # (the small-path oracle already filters self-pairs internally).
+    # Self-edges out FIRST so both paths share one contract: a (x, x)
+    # edge would wrongly demote x from sink status.
     alias_edges = alias_edges.where(F.col("surface") != F.col("alias_of"))
     # limit(k+1)+collect instead of count()+collect(): one job decides
     # the branch AND fetches the edges when small.
-    probe = alias_edges.limit(small_threshold + 1).collect()
-    if len(probe) <= small_threshold:
-        from ..oracle.reference import canonicalize_aliases
-
+    cap = _DRIVER_CC_MAX_EDGES
+    probe = alias_edges.limit(cap + 1).collect()
+    if len(probe) <= cap:
         spark = alias_edges.sparkSession
-        mapping = canonicalize_aliases([(r["surface"], r["alias_of"]) for r in probe])
+        labels = _uf_min_labels([(r["surface"], r["alias_of"]) for r in probe])
+        surfaces = {r["surface"] for r in probe}
+        sink_rep: dict[str, str] = {}
+        for node, comp in sorted(labels.items()):
+            if node not in surfaces:
+                sink_rep.setdefault(comp, node)
+        mapping = sorted(
+            (node, sink_rep.get(comp, comp)) for node, comp in labels.items()
+            if node != sink_rep.get(comp, comp)
+        )
         if not mapping:
             return spark.createDataFrame([], "surface string, canonical string")
         # pandas + Arrow, not a plain Python list: local-list
@@ -274,7 +252,7 @@ def canonical_mapping(alias_edges: DataFrame, small_threshold: int = SMALL_ALIAS
         import pandas as pd
 
         return spark.createDataFrame(
-            pd.DataFrame(sorted(mapping.items()), columns=["surface", "canonical"]),
+            pd.DataFrame(mapping, columns=["surface", "canonical"]),
             schema="surface string, canonical string",
         )
 

@@ -1,7 +1,13 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All hot paths are pure Catalyst (xxhash64, higher-order array
-functions) — no Python on executors except the vectorized simhash.
+The hot paths are Arrow passes: the MinHash band table is one fused
+``mapInArrow`` pass (shingle, hash, fold, band), shingles for the
+candidate verify come from an Arrow-vectorized UDF, and SimHash is a
+pandas UDF. Joins, verification and grouping stay in Catalyst.
+
+Sketch geometry is derived, not configured: MinHash bands and rows come
+from the verify threshold (``minhash_plan``), SimHash blocks from the
+corpus size (``pick_simhash_blocks``), and shingles are word 3-grams.
 
 Scale notes:
 - exact dedup is one hash-groupBy shuffle; at 100 TB you'd pre-bucket
@@ -131,9 +137,11 @@ def exploded_shingles(df: DataFrame, text_col: str = "text",
     ~4x the fused form (measured 3.2 s vs 0.8 s for 2.6M shingles at
     50k docs): python-list → Arrow ListArray conversion plus the
     Generate node dominate, while a flat (id, gram) RecordBatch built
-    once per Arrow batch is two contiguous arrays. Used by the
-    corpus-scale gram paths (minhash signatures, decontamination);
-    the array form stays for candidate-verify set ops."""
+    once per Arrow batch is two contiguous arrays. Only the JVM
+    reference ``minhash_band_table_catalyst`` reads it: the shipped
+    band table shingles inside its own Arrow pass, decontamination
+    uses ``exploded_gram_hashes``, and the candidate verify uses the
+    array form."""
     import pyarrow as pa
 
     def _run(batches):
@@ -203,6 +211,14 @@ def exploded_gram_hashes(df: DataFrame, text_col: str = "text",
 # plain codegen'd projections — no interpreted lambda per (i, shingle).
 _MERSENNE_P = (1 << 31) - 1
 
+# Shingle width of every near-dup path: word 3-grams.
+_SHINGLE_N = 3
+# minhash_plan: recall at the threshold, how far below it the S-curve
+# midpoint may sit, and the signature budget (b·r hash mins per doc).
+_TARGET_RECALL = 0.99
+_MARGIN = 0.13
+_MAX_HASHES = 256
+
 
 def _hash_params(num_hashes: int) -> list[tuple[int, int]]:
     import random
@@ -211,8 +227,7 @@ def _hash_params(num_hashes: int) -> list[tuple[int, int]]:
     return [(rng.randrange(1, _MERSENNE_P), rng.randrange(0, _MERSENNE_P)) for _ in range(num_hashes)]
 
 
-def minhash_plan(threshold: float, target_recall: float = 0.99,
-                 margin: float = 0.13, max_hashes: int = 256) -> tuple[int, int]:
+def minhash_plan(threshold: float) -> tuple[int, int]:
     """Threshold-driven (num_hashes, bands) for banded MinHash.
 
     A pair at Jaccard J matches one band with p = J^r; the banding
@@ -227,16 +242,16 @@ def minhash_plan(threshold: float, target_recall: float = 0.99,
     pair's candidate probability drops 0.39 → 0.019. Unlike hyperplane
     LSH the rule is size-independent — random pairs (J≈0) never
     collide; it is the sub-threshold similarity mass that must sit
-    below the S-curve. ``max_hashes`` caps signature cost (b·r hash
+    below the S-curve. ``_MAX_HASHES`` caps signature cost (b·r hash
     mins per doc); if the cap binds (low thresholds), the midpoint
     constraint is relaxed, candidates grow, and a ``UserWarning`` is
     emitted so the degraded regime is observable at plan time — raise
-    the threshold or the cap.
+    the threshold.
     """
     import math
     import warnings
 
-    miss = max(1e-12, 1.0 - target_recall)
+    miss = 1.0 - _TARGET_RECALL
     best = None
     for r in range(4, 33):
         # exact band count for the recall target: recall = 1-(1-t^r)^b
@@ -245,77 +260,37 @@ def minhash_plan(threshold: float, target_recall: float = 0.99,
         # and the extra agg columns push the signature aggregation
         # past codegen's field budget)
         b = max(2, math.ceil(math.log(miss) / math.log(1 - threshold ** r)))
-        if b * r > max_hashes:
+        if b * r > _MAX_HASHES:
             if best is None:
                 # cap binds before the recall target fits (low
                 # thresholds): fill the budget at the smallest r —
                 # best recall available under the cap
-                best = (max_hashes // 4 * 4, max_hashes // 4)
+                best = (_MAX_HASHES // 4 * 4, _MAX_HASHES // 4)
             break
         best = (b * r, b)
         midpoint = (1 / b) ** (1 / r)
-        if midpoint >= threshold - margin:
+        if midpoint >= threshold - _MARGIN:
             return best
     n_h, n_b = best
     mid = (1 / n_b) ** (n_b / n_h)
     warnings.warn(
-        f"minhash_plan: the {max_hashes}-hash cap binds at threshold "
+        f"minhash_plan: the {_MAX_HASHES}-hash cap binds at threshold "
         f"{threshold} — S-curve midpoint {mid:.2f} sits below "
-        f"threshold-margin {threshold - margin:.2f}; the candidate set "
-        f"will include sub-threshold pairs (raise the threshold or "
-        f"max_hashes)",
+        f"threshold-margin {threshold - _MARGIN:.2f}; the candidate set "
+        f"will include sub-threshold pairs (raise the threshold)",
         stacklevel=2,
     )
     return best
-
-
-def _resolve_minhash_geometry(
-    threshold: float, num_hashes: int | None, bands: int | None,
-    margin: float = 0.13,
-) -> tuple[int, int]:
-    """(num_hashes, bands), coherent when only ONE is given.
-
-    Mixing one explicit value with the other taken from
-    ``minhash_plan`` computes the auto half for a DIFFERENT geometry
-    (e.g. num_hashes=32 with auto bands=10 → r=3, two hashes silently
-    discarded, midpoint J≈0.46). Instead: given only ``num_hashes``,
-    pick the divisor band count whose S-curve midpoint (1/b)^(1/r)
-    lands lowest while still clearing threshold−margin (falling back
-    to the highest midpoint available); given only ``bands``, solve
-    the smallest r with (1/b)^(1/r) ≥ threshold−margin."""
-    import math
-
-    if num_hashes is None and bands is None:
-        return minhash_plan(threshold)
-    if num_hashes is not None and bands is not None:
-        return num_hashes, bands
-    if num_hashes is not None:
-        divs = [b for b in range(2, num_hashes // 2 + 1) if num_hashes % b == 0]
-        if not divs:
-            raise ValueError(
-                f"num_hashes={num_hashes} admits no (bands, rows) split "
-                f"with bands>=2 and rows>=2; pass bands explicitly")
-        # midpoint falls as b rises (smaller r): max(ok) = best recall
-        # that still clears; fallback = smallest b = closest from below
-        ok = [b for b in divs if (1 / b) ** (b / num_hashes) >= threshold - margin]
-        return num_hashes, (max(ok) if ok else min(divs))
-    r = max(2, math.ceil(math.log(bands) / -math.log(max(threshold - margin, 1e-9))))
-    return bands * r, bands
 
 
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int | None = None,
-    bands: int | None = None,
-    shingle_n: int = 3,
     threshold: float = 0.9,
 ) -> DataFrame:
-    """Near-dup candidate pairs via banded MinHash (id_a < id_b).
-    ``num_hashes``/``bands`` default to ``minhash_plan(threshold)``;
-    with exactly one given, the other is derived coherently from it
-    (``_resolve_minhash_geometry``).
+    """Near-dup candidate pairs via banded MinHash (id_a < id_b), at
+    the geometry ``minhash_plan(threshold)``.
 
     The band table is PINNED before the self-join: the executed plan
     otherwise runs the whole signature subtree (Arrow shingle pass +
@@ -325,8 +300,7 @@ def minhash_lsh_candidates(
     PythonMapInArrow in the executed plan without the pin)."""
     from ..functions.persistence import materialize
 
-    banded = materialize(minhash_band_table(df, text_col, id_col, num_hashes,
-                                            bands, shingle_n, threshold))
+    banded = materialize(minhash_band_table(df, text_col, id_col, threshold))
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -374,9 +348,6 @@ def minhash_band_table(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int | None = None,
-    bands: int | None = None,
-    shingle_n: int = 3,
     threshold: float = 0.9,
 ) -> DataFrame:
     """The (id, band, bh) band-key table for a corpus slice — the
@@ -401,12 +372,11 @@ def minhash_band_table(
     trees per call — at 100 TB the gram explode was the single largest
     shuffle in the dedup path; here the grams never leave the Python
     worker that produced them."""
-    num_hashes, bands = _resolve_minhash_geometry(threshold, num_hashes, bands)
+    num_hashes, bands = minhash_plan(threshold)
     rows = num_hashes // bands
     params = _hash_params(num_hashes)
     a_vec = np.array([a for a, _ in params], dtype=np.int64)
     b_vec = np.array([b for _, b in params], dtype=np.int64)
-    n = shingle_n
     p31 = np.int64(1 << 31)
 
     import pyarrow as pa
@@ -422,7 +392,7 @@ def minhash_band_table(
             gram_bytes: list = []
             offsets = [0]
             for i, txt in zip(ids, texts):
-                gs = _word_grams(txt, n)
+                gs = _word_grams(txt, _SHINGLE_N)
                 if not gs:
                     continue
                 doc_ids.append(i)
@@ -471,9 +441,6 @@ def minhash_band_table_catalyst(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int | None = None,
-    bands: int | None = None,
-    shingle_n: int = 3,
     threshold: float = 0.9,
 ) -> DataFrame:
     """JVM reference for ``minhash_band_table`` (and its semantic twin
@@ -481,10 +448,10 @@ def minhash_band_table_catalyst(
     ``F.xxhash64`` per shingle → ``num_hashes`` plain arithmetic
     projections (whole-stage codegen) → groupBy-min → band struct
     explode. The parity test pins the Arrow fast path against this."""
-    num_hashes, bands = _resolve_minhash_geometry(threshold, num_hashes, bands)
+    num_hashes, bands = minhash_plan(threshold)
     rows = num_hashes // bands
     params = _hash_params(num_hashes)
-    ex = exploded_shingles(df, text_col, id_col, shingle_n).withColumn(
+    ex = exploded_shingles(df, text_col, id_col, _SHINGLE_N).withColumn(
         "h", F.pmod(F.xxhash64("g"), F.lit(1 << 31))
     )
     sig = ex.groupBy("id").agg(
@@ -511,7 +478,6 @@ def jaccard_verify(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.7,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Exact word-shingle Jaccard on candidate pairs only. Shingles are
     computed only for rows that appear in a candidate pair (semi-join
@@ -536,7 +502,7 @@ def jaccard_verify(
     sh = materialize(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
         .join(F.broadcast(cand_ids), "id", "left_semi")
-        .select("id", word_shingles(F.col("_t"), shingle_n).alias("sh"))
+        .select("id", word_shingles(F.col("_t"), _SHINGLE_N).alias("sh"))
     )
     j = (
         candidates.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
@@ -556,18 +522,14 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    shingle_n: int = 3,
-    num_hashes: int | None = None,
-    bands: int | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard verify.
-    Band geometry defaults to ``minhash_plan(threshold)`` so the
+    Band geometry is ``minhash_plan(threshold)``, so the
     S-curve midpoint tracks the verify threshold — the candidate set
     stays proportional to the real near-dup mass, not to the corpus's
     moderate-similarity pair count (see ``minhash_plan``)."""
-    cands = minhash_lsh_candidates(df, text_col, id_col, num_hashes, bands,
-                                   shingle_n, threshold)
-    return jaccard_verify(cands, df, text_col, id_col, threshold, shingle_n)
+    cands = minhash_lsh_candidates(df, text_col, id_col, threshold)
+    return jaccard_verify(cands, df, text_col, id_col, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -635,9 +597,6 @@ def dedup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.9,
-    shingle_n: int = 3,
-    num_hashes: int | None = None,
-    bands: int | None = None,
 ) -> DataFrame:
     """Near-dup CLUSTERS: LSH candidate pairs → exact-Jaccard verify →
     connected components → one representative per cluster.
@@ -671,8 +630,7 @@ def dedup_clusters(
     # padded→raw id map, and recomputing them means re-running the
     # signature+verify pipeline per consumer (measured 1061 s → ~150 s
     # at 320k docs from this and the jaccard_verify pin alone).
-    pairs = materialize(ngram_jaccard_pairs(df, text_col, id_col, threshold,
-                                            shingle_n, num_hashes, bands))
+    pairs = materialize(ngram_jaccard_pairs(df, text_col, id_col, threshold))
     # Pad width sized to the data: lpad TRUNCATES overflow, so a fixed
     # 20 would merge any two >20-char ids sharing a 20-char prefix into
     # one CC node. One tiny agg over the already-materialized pairs.
@@ -709,7 +667,12 @@ def _block_widths(m: int) -> list[int]:
     return [base + (1 if i < rem else 0) for i in range(m)]
 
 
-def pick_simhash_blocks(n: int, max_hamming: int = 3, max_blocks: int = 8) -> int:
+# Upper end of the simhash block-count search: 8 blocks give 40-bit
+# table keys at radius 3, enough for ~2^38 documents.
+_MAX_SIMHASH_BLOCKS = 8
+
+
+def pick_simhash_blocks(n: int, max_hamming: int = 3) -> int:
     """Smallest block count m (> max_hamming) whose table key carries
     ≥ log2(n)+2 bits — the scale dial of the multi-table scheme.
 
@@ -727,7 +690,7 @@ def pick_simhash_blocks(n: int, max_hamming: int = 3, max_blocks: int = 8) -> in
     # pigeonhole needs m > max_hamming blocks; a wide radius therefore
     # forces narrow block keys (the inherent simhash trade-off)
     lo = max_hamming + 1
-    hi = max(max_blocks, lo)
+    hi = max(_MAX_SIMHASH_BLOCKS, lo)
     target = math.log2(max(n, 2)) + 2
     for m in range(lo, hi + 1):
         widths = sorted(_block_widths(m))
@@ -762,31 +725,22 @@ def simhash_blocking_keys(sig_col, m: int, max_hamming: int = 3):
 
 
 def simhash_near_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      max_hamming: int = 3, blocks: int | None = None,
-                      n_docs: int | None = None) -> DataFrame:
+                      max_hamming: int = 3, n_docs: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash, multi-table pigeonhole blocking.
 
-    ``blocks`` (m) defaults to ``pick_simhash_blocks(n)`` so the
-    table-key width tracks log2(n)+2 — the fixed 4x16-bit chunk layout
-    this replaces kept only 2^16 buckets per table and went quadratic
-    past ~10^5 docs. The output is invariant to m (exact pigeonhole +
-    exact hamming verify), so changing the block count never changes
-    results, only the candidate volume. Auto-sizing needs the corpus
-    size: pass ``n_docs`` when the caller already knows it (pipelines,
-    benches), else one ``df.count()`` job is spent. ``blocks`` must
-    exceed ``max_hamming`` — the pigeonhole argument needs at least
-    one block untouched by the allowed bit flips; fewer blocks would
-    degenerate every table key to a constant (an all-pairs join).
+    The block count m is ``pick_simhash_blocks(n)``, so the table-key
+    width tracks log2(n)+2 — the fixed 4x16-bit chunk layout this
+    replaces kept only 2^16 buckets per table and went quadratic past
+    ~10^5 docs. m always exceeds ``max_hamming`` (the pigeonhole needs
+    one block untouched by the allowed bit flips), and the output is
+    invariant to m (exact pigeonhole + exact hamming verify): the
+    corpus size moves only the candidate volume, never the result.
+    Pass ``n_docs`` when the caller already knows the corpus size
+    (pipelines, benches), else one ``df.count()`` job is spent.
     """
-    if blocks is not None and blocks <= max_hamming:
-        raise ValueError(
-            f"blocks={blocks} must be > max_hamming={max_hamming}: the "
-            f"pigeonhole blocking keys on (blocks - max_hamming)-block "
-            f"combinations, which would be empty")
     from ..functions.persistence import materialize
 
-    m = blocks if blocks is not None else pick_simhash_blocks(
-        n_docs if n_docs is not None else df.count(), max_hamming)
+    m = pick_simhash_blocks(n_docs if n_docs is not None else df.count(), max_hamming)
     # Pin the (id, sig) table before fanning out to blocking keys: the
     # self-join's broadcast side otherwise re-runs the simhash pandas
     # UDF over the whole corpus (no ReuseExchange under AQE's

@@ -49,7 +49,7 @@ def disjointness_violations(edges: DataFrame, disjoint_pairs: list[tuple[str, st
     return out.distinct()
 
 
-def subclass_cycles(edges: DataFrame, max_iter: int = 64) -> DataFrame:
+def subclass_cycles(edges: DataFrame) -> DataFrame:
     """A17 second axiom class: SUBCLASS_OF cycles (a taxonomy must be a
     DAG; any cycle makes every member class unsatisfiable under the
     reasoner).
@@ -67,7 +67,13 @@ def subclass_cycles(edges: DataFrame, max_iter: int = 64) -> DataFrame:
        is the anomalous cycle-connected region — tiny by construction
        in a taxonomy, where cycles are data bugs — so an iterative
        (src, dst) transitive-closure join is safe there; cycle nodes
-       are exactly those with a (n, n) reachability pair.
+       are exactly those with a (n, n) reachability pair. Each round
+       joins the reachability set with itself (path doubling), so a
+       cycle of length L closes in ⌈log2 L⌉ rounds.
+
+    Both loops run until their edge count stops changing: the trim only
+    removes edges and the closure only adds pairs of a finite node set,
+    so each reaches its fixed point.
     """
     e = (
         edges.where(F.col("rel_type") == "SUBCLASS_OF")
@@ -78,7 +84,7 @@ def subclass_cycles(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     # not a pruned-vs-current pair of jobs per round.
     n_edges = e.count()
     for out_col, in_col in (("src", "dst"), ("dst", "src")):
-        for _ in range(max_iter):
+        while True:
             nodes_out = e.select(F.col(out_col).alias("n")).distinct()
             nodes_in = e.select(F.col(in_col).alias("n")).distinct()
             # keep only edges whose `in_col` endpoint still has an
@@ -98,10 +104,11 @@ def subclass_cycles(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     e = e.select("src", "dst")
     reach = e.localCheckpoint()
     n_reach = reach.count()
-    for _ in range(max_iter):
+    while True:
+        # paths up to length 2^k after k rounds: reach ∘ reach
         nxt = (
             reach.alias("r")
-            .join(e.alias("g"), F.col("r.dst") == F.col("g.src"))
+            .join(reach.alias("g"), F.col("r.dst") == F.col("g.src"))
             .select(F.col("r.src").alias("src"), F.col("g.dst").alias("dst"))
         )
         new_reach = reach.unionByName(nxt).distinct().localCheckpoint()

@@ -67,13 +67,20 @@ def pairwise_topk(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.RandomState(seed)
+def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
+    rng = np.random.RandomState(42)
     return rng.randn(n_planes, dim).astype(np.float64)
 
 
-def lsh_plan(n: int, threshold: float, target_recall: float = 0.99,
-             max_bands: int = 128) -> tuple[int, int]:
+# lsh_plan: recall at the threshold, and the band cap (signature cost
+# is bands·rows hyperplane dots per vector).
+_TARGET_RECALL = 0.99
+_MAX_BANDS = 128
+# The cosine whose recall lsh_banded_topk's band plan guarantees.
+_TOPK_THRESHOLD = 0.9
+
+
+def lsh_plan(n: int, threshold: float) -> tuple[int, int]:
     """Scale-aware (bands, rows_per_band) for banded hyperplane LSH.
 
     Sizing rule (the fixed 8x6 default was sandbox-tuned — a 6-bit band
@@ -86,74 +93,34 @@ def lsh_plan(n: int, threshold: float, target_recall: float = 0.99,
     - ``bands`` b = ln(1/(1-recall)) / p_bit^r with
       p_bit = 1-acos(threshold)/π (the collision probability of a pair
       AT the threshold), so a threshold-grade pair is missed with
-      probability ≤ 1-target_recall; true near-dups (cos≥0.99) are
+      probability ≤ 1-_TARGET_RECALL; true near-dups (cos≥0.99) are
       missed with far lower probability still.
-    - b is capped at ``max_bands`` (signature cost is b·r hyperplane
-      dots per vector); when the cap binds, r is walked back until the
-      recall target fits, trading candidate linearity for recall —
-      candidates then grow as b·n²/2^r, which stays ~O(n·b) while
-      n ≲ 2^r. For corpora beyond that at low thresholds, raise
-      ``max_bands`` or the threshold (inherent random-hyperplane LSH
+    - b is capped at ``_MAX_BANDS``; when the cap binds, r is walked
+      back until the recall target fits, trading candidate linearity
+      for recall — candidates then grow as b·n²/2^r, which stays
+      ~O(n·b) while n ≲ 2^r. For corpora beyond that at low
+      thresholds, raise the threshold (inherent random-hyperplane LSH
       cost, not a tuning artifact).
     """
     import math
 
     p_bit = 1 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
-    miss = max(1e-12, 1.0 - target_recall)
+    miss = 1.0 - _TARGET_RECALL
     r = max(4, math.ceil(math.log2(max(n, 2))) + 2)
     while r > 4:
         b = math.ceil(math.log(1 / miss) / (p_bit ** r))
-        if b <= max_bands:
+        if b <= _MAX_BANDS:
             break
         r -= 1
-    b = min(max_bands, max(4, math.ceil(math.log(1 / miss) / (p_bit ** r))))
+    b = min(_MAX_BANDS, max(4, math.ceil(math.log(1 / miss) / (p_bit ** r))))
     return b, r
-
-
-def _resolve_lsh_geometry(
-    threshold: float,
-    bands: int | None,
-    rows_per_band: int | None,
-    n: int | None = None,
-    target_recall: float = 0.99,
-    max_bands: int = 128,
-) -> tuple[int, int]:
-    """(bands, rows_per_band), coherent when only ONE is given.
-
-    The old pattern filled the missing half from ``lsh_plan`` — a value
-    computed for a DIFFERENT geometry (e.g. explicit rows_per_band=4
-    with an auto band count solved for r=log2(n)+2 under-delivers
-    recall by orders of magnitude). Instead: given only
-    ``rows_per_band`` r, solve bands from the recall target at the
-    threshold (b = ln(1/miss)/p_bit^r, capped); given only ``bands``
-    b, take the LARGEST r whose recall target still fits in b bands
-    (floored at 4 — an explicit band count below the recall
-    requirement keeps r=4's best-available recall). Neither
-    single-param path needs the corpus size."""
-    import math
-
-    if bands is not None and rows_per_band is not None:
-        return bands, rows_per_band
-    if bands is None and rows_per_band is None:
-        if n is None:
-            raise ValueError("corpus size required to auto-size both bands and rows_per_band")
-        return lsh_plan(n, threshold, target_recall, max_bands)
-    p_bit = 1 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
-    need = math.log(1 / max(1e-12, 1.0 - target_recall))
-    if rows_per_band is not None:
-        b = min(max_bands, max(4, math.ceil(need / (p_bit ** rows_per_band))))
-        return b, rows_per_band
-    if need / bands >= 1.0:
-        return bands, 4
-    return bands, max(4, math.floor(math.log(need / bands) / math.log(p_bit)))
 
 
 def lsh_band_signatures(
     df: DataFrame,
     dim: int,
-    bands: int = 8,
-    rows_per_band: int = 6,
-    seed: int = 42,
+    bands: int,
+    rows_per_band: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
@@ -164,7 +131,7 @@ def lsh_band_signatures(
     recall (an AND-only single signature at b bits has collision
     probability p_bit^b, ~28% for cosine 0.95 at b=12; the round-1
     failure mode)."""
-    planes = _hyperplanes(dim, bands * rows_per_band, seed)
+    planes = _hyperplanes(dim, bands * rows_per_band)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def sigs_udf(vecs: pd.Series) -> pd.Series:
@@ -186,12 +153,8 @@ def lsh_banded_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    bands: int | None = None,
-    rows_per_band: int | None = None,
-    seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    recall_threshold: float = 0.9,
     n_docs: int | None = None,
 ) -> DataFrame:
     """ANN top-k via banded OR-construction: candidates = vectors
@@ -203,18 +166,15 @@ def lsh_banded_topk(
     signature table is precomputed and partitioned by (band, sig) so
     the probe is partition pruning.
 
-    ``bands``/``rows_per_band`` default to ``lsh_plan(n,
-    recall_threshold)`` — candidate volume stays ~O(n·bands/4) instead
-    of n/2^6-per-band at the old fixed 8x6. Pass ``n_docs`` when the
-    caller knows the corpus size (else one df.count() job sizes it);
-    with exactly one of the pair given, the other is derived coherently
-    from it, no count needed (``_resolve_lsh_geometry``)."""
-    if bands is None and rows_per_band is None and n_docs is None:
+    Band geometry is ``lsh_plan(n, _TOPK_THRESHOLD)`` — candidate volume stays
+    ~O(n·bands/4) instead of n/2^6-per-band at the old fixed 8x6. Pass
+    ``n_docs`` when the caller knows the corpus size, else one
+    df.count() job sizes it."""
+    if n_docs is None:
         n_docs = df.count()
-    bands, rows_per_band = _resolve_lsh_geometry(
-        recall_threshold, bands, rows_per_band, n_docs)
+    bands, rows_per_band = lsh_plan(n_docs, _TOPK_THRESHOLD)
     dim = len(query_vec)
-    planes = _hyperplanes(dim, bands * rows_per_band, seed)
+    planes = _hyperplanes(dim, bands * rows_per_band)
     bits = (planes @ np.asarray(query_vec, dtype=np.float64)) > 0
     probe = F.lit(False)
     for b in range(bands):
@@ -223,7 +183,7 @@ def lsh_banded_topk(
             s |= int(bits[b * rows_per_band + j]) << j
         probe = probe | ((F.col("band") == b) & (F.col("sig") == s))
 
-    sig = lsh_band_signatures(df, dim, bands, rows_per_band, seed, vec_col, id_col)
+    sig = lsh_band_signatures(df, dim, bands, rows_per_band, vec_col, id_col)
     cand_ids = sig.where(probe).select(F.col("id").alias(id_col)).distinct()
     cand = df.join(cand_ids, id_col, "left_semi")
     return brute_force_topk(cand, query_vec, k, vec_col, id_col)
@@ -232,9 +192,6 @@ def lsh_banded_topk(
 def embedding_near_dups(
     df: DataFrame,
     threshold: float = 0.9,
-    bands: int | None = None,
-    rows_per_band: int | None = None,
-    seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_docs: int | None = None,
@@ -243,26 +200,23 @@ def embedding_near_dups(
     (union of per-band bucket matches, deduped BEFORE vectors are
     fetched) → exact cosine verify >= threshold.
 
-    Band geometry defaults to ``lsh_plan(count, threshold)`` — band key
+    Band geometry is ``lsh_plan(count, threshold)`` — band key
     width ≈ log2(n)+2 bits so random-pair collisions stay ~O(n·bands)
     (the old fixed 8x6 default had 64 bucket values per band, i.e.
     ~n²/8 candidates on an unstructured corpus — quadratic at scale),
     and the band count is solved from the recall target at the
     threshold: recall = 1-(1-p_bit^r)^b with p_bit = 1-acos(c)/π, ≥0.99
     for threshold-grade pairs and ~1-1e-9 for true near-dups (c≥0.99).
-    Auto-sizing needs the corpus size: pass ``n_docs`` when the caller
-    knows it, else one df.count() job is spent; explicit
-    ``bands``/``rows_per_band`` skip sizing entirely, and exactly one
-    of the pair is completed coherently without a count
-    (``_resolve_lsh_geometry``). The verify never scans all pairs, and at
-    scale the band self-join keys are uniform by construction (no
-    skew). Fixes the round-1 single-band AND-construction whose recall
+    Sizing needs the corpus size: pass ``n_docs`` when the caller
+    knows it, else one df.count() job is spent. The verify never scans
+    all pairs, and at scale the band self-join keys are uniform by
+    construction (no skew). Fixes the round-1 single-band AND-construction whose recall
     was ~28% (VERDICT.md #4; ADVICE #1). Reference parity: dedup intent
     of src/ontology_extension_manager.py find_similar (behavior
     studied, no code copied)."""
-    if bands is None and rows_per_band is None and n_docs is None:
+    if n_docs is None:
         n_docs = df.count()
-    bands, rows_per_band = _resolve_lsh_geometry(threshold, bands, rows_per_band, n_docs)
+    bands, rows_per_band = lsh_plan(n_docs, threshold)
     # Pin the signature table before the self-join: AQE's broadcast
     # conversion defeats ReuseExchange on self-joins, so the signature
     # pandas UDF (one matmul per batch over the WHOLE corpus) would
@@ -271,7 +225,7 @@ def embedding_near_dups(
     from ..functions.persistence import materialize
 
     sig = materialize(lsh_band_signatures(
-        df, _first_dim(df, vec_col), bands, rows_per_band, seed, vec_col, id_col
+        df, _first_dim(df, vec_col), bands, rows_per_band, vec_col, id_col
     ))
     a, b = sig.alias("a"), sig.alias("b")
     cand = (

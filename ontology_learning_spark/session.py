@@ -99,10 +99,12 @@ def build_session(
         # genuinely large inputs scan a few more partitions up front —
         # negligible next to the saved job round-trip.
         .config("spark.sql.limit.initialNumPartitions", "32")
-        # The minhash signature aggregation carries bands*rows (~90 at
-        # threshold 0.9: r=9, b=10) min-agg buffer fields; the default maxFields
-        # (100) silently drops that stage out of whole-stage codegen
-        # into interpreted row-based aggregation (~2x the wall).
+        # The Catalyst twin of the minhash band table (only its parity
+        # test runs it; the shipped table is one mapInArrow pass)
+        # carries bands*rows (~90 at threshold 0.9: r=9, b=10) min-agg
+        # buffer fields; the default maxFields (100) silently drops that
+        # stage out of whole-stage codegen into interpreted row-based
+        # aggregation (~2x the wall).
         .config("spark.sql.codegen.maxFields", "512")
         # Whole-stage-codegen classes are cached per session in an LRU of
         # this many entries (default 100). A build uses 242 distinct

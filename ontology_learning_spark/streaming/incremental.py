@@ -220,7 +220,6 @@ def run_streaming_near_dedup(
     state_dir: str,
     checkpoint_dir: str,
     threshold: float = 0.9,
-    shingle_n: int = 3,
     timeout_sec: int = 300,
     max_files_per_trigger: int = 4,
 ) -> None:
@@ -264,9 +263,7 @@ def run_streaming_near_dedup(
         batch_df = batch_df.select("doc_id", "text")
         batch_df.write.mode("overwrite").parquet(f"{state_dir}/docs/batch_id={batch_id}")
         nb = minhash_band_table(
-            s.read.parquet(f"{state_dir}/docs/batch_id={batch_id}"),
-            shingle_n=shingle_n, threshold=threshold,
-        )
+            s.read.parquet(f"{state_dir}/docs/batch_id={batch_id}"), threshold=threshold)
         nb.write.mode("overwrite").parquet(f"{state_dir}/bands/batch_id={batch_id}")
         nb = s.read.parquet(f"{state_dir}/bands/batch_id={batch_id}")
         all_bands = s.read.parquet(f"{state_dir}/bands")
@@ -280,8 +277,7 @@ def run_streaming_near_dedup(
                     F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"))
             .distinct()
         )
-        pairs = jaccard_verify(cands, all_docs, threshold=threshold,
-                               shingle_n=shingle_n)
+        pairs = jaccard_verify(cands, all_docs, threshold=threshold)
         edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         _, mapping = _latest_mapping()
         mapping = connected_components(edges) if mapping is None \

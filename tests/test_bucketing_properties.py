@@ -6,10 +6,12 @@ from __future__ import annotations
 
 import string
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ontology_learning_spark.functions import semantics as S
+from ontology_learning_spark.operators import canonicalize as CC
 
 words = st.text(alphabet=string.ascii_lowercase, min_size=1, max_size=12)
 texts = st.text(
@@ -65,15 +67,16 @@ def test_embedding_unit_norm_or_zero(t):
     assert abs(norm2 - 1.0) < 1e-9 or norm2 == 0.0
 
 
-def test_incremental_components_equals_full_recompute(spark):
+# driver union-find and the distributed min-label loop
+@pytest.mark.parametrize("cc_max_edges", [CC._DRIVER_CC_MAX_EDGES, 0])
+def test_incremental_components_equals_full_recompute(spark, monkeypatch, cc_max_edges):
     """incremental_components(CC(base), delta) must be row-identical to
     CC(base ∪ delta) — merges across existing components, brand-new
-    nodes, no-op intra-component edges, empty deltas, and the
-    distributed contracted-graph fallback all included."""
+    nodes, no-op intra-component edges, empty deltas and a 60-node
+    chain split across base and delta all included, on both CC paths."""
     import random
 
-    from ontology_learning_spark.operators import canonicalize as CC
-
+    monkeypatch.setattr(CC, "_DRIVER_CC_MAX_EDGES", cc_max_edges)
     rng = random.Random(51)
     nodes = [f"n{i:03d}" for i in range(60)]
     all_edges = list({(a, b) for a, b in
@@ -84,18 +87,26 @@ def test_incremental_components_equals_full_recompute(spark):
     # and a duplicate no-op edge
     delta = delta + [("z_new1", "z_new2"), ("z_new2", nodes[0]), base[0]]
 
-    bdf = spark.createDataFrame(base, "src string, dst string")
+    def cc_rows(edges):
+        return {tuple(r) for r in CC.connected_components(
+            spark.createDataFrame(edges, "src string, dst string")).collect()}
+
+    full = cc_rows(base + delta)
+    base_cc = CC.connected_components(spark.createDataFrame(base, "src string, dst string"))
     ddf = spark.createDataFrame(delta, "src string, dst string")
-    full = {tuple(r) for r in CC.connected_components(
-        spark.createDataFrame(base + delta, "src string, dst string")).collect()}
-    base_cc = CC.connected_components(bdf)
     inc = {tuple(r) for r in CC.incremental_components(base_cc, ddf).collect()}
     assert inc == full
     # empty delta is the identity
     empty = spark.createDataFrame([], "src string, dst string")
     assert {tuple(r) for r in CC.incremental_components(base_cc, empty).collect()} \
         == {tuple(r) for r in base_cc.collect()}
-    # force the distributed contracted-CC path
-    inc2 = {tuple(r) for r in CC.incremental_components(
-        base_cc, ddf, small_threshold=0).collect()}
-    assert inc2 == full
+
+    # a 60-node chain n000 -> ... -> n059 is one component, in one
+    # pass and folded from two halves
+    chain = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)]
+    full_chain = cc_rows(chain)
+    assert full_chain == {(f"n{i:03d}", "n000") for i in range(60)}
+    half_cc = CC.connected_components(spark.createDataFrame(chain[:30], "src string, dst string"))
+    folded = CC.incremental_components(
+        half_cc, spark.createDataFrame(chain[30:], "src string, dst string"))
+    assert {tuple(r) for r in folded.collect()} == full_chain

@@ -19,12 +19,17 @@ def graph(spark):
     return nodes.cache(), edges.cache()
 
 
-@pytest.mark.parametrize("small_threshold", [200_000, 0])  # driver-side and distributed paths
-def test_connected_components_chain_and_hub(spark, small_threshold):
+# driver union-find and the distributed min-label loop
+cc_paths = pytest.mark.parametrize("cc_max_edges", [CC._DRIVER_CC_MAX_EDGES, 0])
+
+
+@cc_paths
+def test_connected_components_chain_and_hub(spark, monkeypatch, cc_max_edges):
+    monkeypatch.setattr(CC, "_DRIVER_CC_MAX_EDGES", cc_max_edges)
     rows = generator.generate_alias_edges()
     alias_df = spark.createDataFrame(rows, "surface string, alias_of string")
     mapping = {r["surface"]: r["canonical"]
-               for r in CC.canonical_mapping(alias_df, small_threshold=small_threshold).collect()}
+               for r in CC.canonical_mapping(alias_df).collect()}
     # chain: thick film resistor -> chip resistor -> resistor
     assert mapping["thick film resistor"] == "resistor"
     assert mapping["smd resistor"] == "resistor"
@@ -35,6 +40,15 @@ def test_connected_components_chain_and_hub(spark, small_threshold):
     # canonical nodes never map away
     assert "resistor" not in mapping
     assert "antenna" not in mapping
+    # a 60-node chain is one component: its diameter (59) exceeds any
+    # fixed round cap short of it
+    chain = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)]
+    cc = CC.connected_components(spark.createDataFrame(chain, "src string, dst string"))
+    assert {r["node"]: r["component"] for r in cc.collect()} == {
+        f"n{i:03d}": "n000" for i in range(60)}
+    chain_df = spark.createDataFrame(chain, "surface string, alias_of string")
+    assert {r["surface"]: r["canonical"] for r in CC.canonical_mapping(chain_df).collect()} \
+        == {f"n{i:03d}": "n059" for i in range(59)}
 
 
 def test_apply_canonicalization(spark):

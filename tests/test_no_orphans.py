@@ -1,17 +1,22 @@
 """Orphan guard: every top-level function and class in the package must
-be reachable by name from the package itself, the tests, the CLI jobs,
-the benchmark or the driver entry module.
+be reachable from what ships — the CLI jobs, the benchmark, the driver
+entry module and the package's own module-level code — or from a
+``TEST_ONLY`` entry.
 
-A name counts as used when it is loaded (``Name`` / ``Attribute``),
-imported (an import alias) or spelled as a string constant (an
-``__all__`` entry, a ``getattr`` / monkeypatch target). Code that no
-caller reaches is deleted, not kept "for composability".
+Reachability is a closure over names: a root's names reach the
+top-level definitions of those names, and a reached definition's body
+reaches the names it uses in turn. A name counts as used when it is
+loaded (``Name`` / ``Attribute``), imported (an import alias) or spelled
+as a string constant (an ``__all__`` entry, a ``getattr`` / monkeypatch
+target). So a helper whose only caller is itself unreached is an orphan
+too. Code that no caller reaches is deleted, not kept "for
+composability".
 
-A definition that only the tests reach must also be listed in
-``TEST_ONLY`` below: a reference feature with its COVERAGE.md row, or
-the oracle or fixture of a named test. Anything else that only tests
-reach is a second copy of something the system already does, and is
-deleted with its tests moved to the kept path.
+A definition that only the tests reach must be listed in ``TEST_ONLY``
+below: a reference feature with its COVERAGE.md row, or the oracle or
+fixture of a named test. Anything else that only tests reach is a second
+copy of something the system already does, and is deleted with its
+tests moved to the kept path.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "ontology_learning_spark"
 TESTS = ROOT / "tests"
-SHIPPED_TREES = [PACKAGE, ROOT / "jobs", ROOT / "perfbench"]
+SHIPPED_TREES = [ROOT / "jobs", ROOT / "perfbench"]
 SHIPPED_FILES = [ROOT / "__spark_entry__.py"]
 
 # name -> ("row", COVERAGE.md row label) | ("test", test file it serves)
@@ -73,49 +78,96 @@ def _parse(path: Path) -> ast.Module:
     return ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
 
 
-def _used_names(trees: list[Path], files: list[Path] = ()) -> set[str]:
-    files = [p for d in trees for p in sorted(d.rglob("*.py"))] + list(files)
+def _names(node: ast.AST) -> set[str]:
     used: set[str] = set()
-    for path in files:
-        for node in ast.walk(_parse(path)):
-            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-                used.add(node.id)
-            elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
-                used.add(node.attr)
-            elif isinstance(node, ast.alias):
-                used.add(node.name.rsplit(".", 1)[-1])
-            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-                used.add(node.value)
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            used.add(n.id)
+        elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+            used.add(n.attr)
+        elif isinstance(n, ast.alias):
+            used.add(n.name.rsplit(".", 1)[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            used.add(n.value)
     return used
 
 
-def _top_level_defs() -> list[tuple[str, str]]:
+def _used_names(trees: list[Path], files: list[Path] = ()) -> set[str]:
+    files = [p for d in trees for p in sorted(d.rglob("*.py"))] + list(files)
+    return set().union(*(_names(_parse(p)) for p in files))
+
+
+DEF_TYPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _top_level_defs() -> list[tuple[str, ast.AST]]:
     out = []
     for path in sorted(PACKAGE.rglob("*.py")):
         for node in _parse(path).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                out.append((f"{path.relative_to(ROOT)}:{node.lineno}", node.name))
+            if isinstance(node, DEF_TYPES):
+                out.append((f"{path.relative_to(ROOT)}:{node.lineno}", node))
     return out
 
 
+def _module_level_names() -> set[str]:
+    """Names the package's import-time code uses: every statement
+    outside a top-level def or class body, plus the decorators, default
+    values and base classes of those definitions."""
+    used: set[str] = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in _parse(path).body:
+            if not isinstance(node, DEF_TYPES):
+                used |= _names(node)
+                continue
+            parts = list(node.decorator_list)
+            if isinstance(node, ast.ClassDef):
+                parts += node.bases + node.keywords
+            else:
+                parts += node.args.defaults + [d for d in node.args.kw_defaults if d]
+            for part in parts:
+                used |= _names(part)
+    return used
+
+
+def _reached(roots: set[str]) -> set[str]:
+    """Names of the top-level definitions reachable from ``roots``."""
+    bodies: dict[str, list[ast.AST]] = {}
+    for _, node in _top_level_defs():
+        bodies.setdefault(node.name, []).append(node)
+    reached: set[str] = set()
+    frontier = [n for n in roots if n in bodies]
+    while frontier:
+        name = frontier.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        for node in bodies[name]:
+            frontier.extend(n for n in _names(node) if n in bodies and n not in reached)
+    return reached
+
+
+def _shipped_roots() -> set[str]:
+    return _used_names(SHIPPED_TREES, SHIPPED_FILES) | _module_level_names()
+
+
 def test_no_orphan_definitions():
-    used = _used_names(SHIPPED_TREES + [TESTS], SHIPPED_FILES)
-    orphans = [f"{where} {name}" for where, name in _top_level_defs() if name not in used]
-    assert not orphans, "top-level definitions no caller reaches:\n" + "\n".join(orphans)
+    reached = _reached(_shipped_roots() | set(TEST_ONLY))
+    tested = _used_names([TESTS])
+    orphans = [
+        f"{where} {node.name}" + (" (only tests reach it)" if node.name in tested else "")
+        for where, node in _top_level_defs() if node.name not in reached
+    ]
+    assert not orphans, (
+        "top-level definitions nothing shipped or listed in TEST_ONLY reaches "
+        "(a second copy? delete it and move its tests to the kept path):\n"
+        + "\n".join(orphans))
 
 
 def test_test_only_definitions_are_listed():
-    shipped = _used_names(SHIPPED_TREES, SHIPPED_FILES)
+    shipped = _reached(_shipped_roots())
     tested = _used_names([TESTS])
-    test_only = {name: where for where, name in _top_level_defs()
-                 if name not in shipped and name in tested}
-    unlisted = [f"{where} {name}" for name, where in test_only.items()
-                if name not in TEST_ONLY]
-    assert not unlisted, (
-        "top-level definitions only tests reach, not listed in TEST_ONLY "
-        "(a second copy? delete it and move its tests to the kept path):\n"
-        + "\n".join(unlisted))
-    stale = sorted(set(TEST_ONLY) - set(test_only))
+    defined = {node.name for _, node in _top_level_defs()}
+    stale = sorted(n for n in TEST_ONLY if n not in defined or n in shipped or n not in tested)
     assert not stale, f"TEST_ONLY entries no longer test-only or gone: {stale}"
 
     coverage = (ROOT / "COVERAGE.md").read_text(encoding="utf-8")
@@ -125,3 +177,32 @@ def test_test_only_definitions_are_listed():
         else:
             assert kind == "test", name
             assert name in (TESTS / ref).read_text(encoding="utf-8"), f"{name}: {ref}"
+
+
+def _imported_modules(path: Path) -> set[tuple[str, ...]]:
+    """Dotted module paths (as tuples) a package file imports, relative
+    imports resolved against the file's package."""
+    pkg = path.relative_to(ROOT).parts[:-1]
+    out: set[tuple[str, ...]] = set()
+    for node in ast.walk(_parse(path)):
+        if isinstance(node, ast.Import):
+            out |= {tuple(a.name.split(".")) for a in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            base = pkg[:len(pkg) - node.level + 1] if node.level else ()
+            mod = base + tuple(node.module.split(".") if node.module else ())
+            out.add(mod)
+            out |= {mod + (a.name,) for a in node.names}
+    return out
+
+
+def test_oracle_is_imported_by_no_package_module():
+    """``oracle.reference`` checks what the build produces, so no build
+    code may call into it: an oracle that shares the build's function
+    would agree with any bug in it."""
+    oracle = ("ontology_learning_spark", "oracle")
+    offenders = [
+        str(path.relative_to(ROOT)) for path in sorted(PACKAGE.rglob("*.py"))
+        if "oracle" not in path.relative_to(PACKAGE).parts
+        and any(m[:2] == oracle for m in _imported_modules(path))
+    ]
+    assert not offenders, f"package modules importing the oracle: {offenders}"

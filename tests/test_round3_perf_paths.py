@@ -92,6 +92,11 @@ def test_subclass_cycles_self_loop_and_clean(spark):
         "src string, dst string, rel_type string",
     )
     assert X.subclass_cycles(clean).count() == 0
+    # a 70-node cycle closes only past 64 single-step closure rounds
+    ring = [(f"c{i:02d}", f"c{(i + 1) % 70:02d}", "SUBCLASS_OF") for i in range(70)]
+    long_cycle = spark.createDataFrame(ring, "src string, dst string, rel_type string")
+    assert {r["name"] for r in X.subclass_cycles(long_cycle).collect()} \
+        == {f"c{i:02d}" for i in range(70)}
 
 
 def test_domain_range_violations(spark):

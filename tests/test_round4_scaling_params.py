@@ -68,7 +68,7 @@ def test_embedding_band_candidates_linear_at_50k(spark):
 
     bands, rows = lsh_plan(N, 0.9)
     assert rows >= 16  # >= log2(50k); the old fixed default was 6
-    sig = lsh_band_signatures(df, dim, bands, rows, seed=42)
+    sig = lsh_band_signatures(df, dim, bands, rows)
     pairs = _bucket_pair_count(sig, "band", "sig")
     # unstructured corpus: E[collisions/band-pair] integrates p_bit^rows
     # over the random-cosine density (∝(1-c²)^((d-3)/2)) — ≈9.3e-6 at
@@ -130,15 +130,17 @@ def test_minhash_plan_scurve_properties():
 
 def test_simhash_output_invariant_to_block_count(spark, docs_df):
     """Exact pigeonhole: the block count is a partition trick, so m=4
-    and m=6 must emit the identical pair set (keys differ, output not)."""
+    and m=6 must emit the identical pair set (keys differ, output not).
+    The corpus size picks m, so m=6 comes from a stated 2^24-doc corpus."""
+    assert pick_simhash_blocks(500) == 4 and pick_simhash_blocks(1 << 24) == 6
     texts = docs_df.select(
         "doc_id",
         F.concat_ws(" ", F.expr("transform(spans, s -> s.text)")).alias("text"),
     )
     base = sorted(
-        tuple(r) for r in simhash_near_dups(texts, blocks=4).collect()
+        tuple(r) for r in simhash_near_dups(texts, n_docs=500).collect()
     )
     alt = sorted(
-        tuple(r) for r in simhash_near_dups(texts, blocks=6).collect()
+        tuple(r) for r in simhash_near_dups(texts, n_docs=1 << 24).collect()
     )
     assert base == alt

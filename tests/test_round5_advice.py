@@ -1,6 +1,6 @@
 """Round-5 guards for the ADVICE.md items: minhash_plan degraded-regime
-warning, coherent one-param sketch geometry, simhash block-count guard,
-and the dedup_clusters pad-width contract for long string ids."""
+warning, simhash corpus-size threading, and the dedup_clusters
+pad-width contract for long string ids."""
 
 from __future__ import annotations
 
@@ -10,12 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from ontology_learning_spark.operators.dedup import (
-    _resolve_minhash_geometry,
     dedup_clusters,
     minhash_plan,
     simhash_near_dups,
 )
-from ontology_learning_spark.operators.simsearch import _resolve_lsh_geometry, lsh_plan
 
 
 def test_minhash_plan_warns_only_when_cap_binds():
@@ -27,60 +25,12 @@ def test_minhash_plan_warns_only_when_cap_binds():
         minhash_plan(0.5)
 
 
-def test_minhash_geometry_one_param_is_coherent():
-    # both given: passthrough
-    assert _resolve_minhash_geometry(0.9, 128, 16) == (128, 16)
-    # neither: the plan
-    assert _resolve_minhash_geometry(0.9, None, None) == minhash_plan(0.9)
-    # only num_hashes: a divisor split whose midpoint clears t - margin
-    # (the old behavior discarded hashes: 32 hashes with auto bands=10
-    # meant r=3 and 2 dead hashes)
-    h, b = _resolve_minhash_geometry(0.9, 32, None)
-    assert h == 32 and 32 % b == 0
-    r = h // b
-    assert (1 / b) ** (1 / r) >= 0.9 - 0.13
-    # only bands: r solved so the midpoint clears
-    h2, b2 = _resolve_minhash_geometry(0.9, None, 10)
-    assert b2 == 10 and h2 % 10 == 0
-    assert (1 / 10) ** (10 / h2) >= 0.9 - 0.13
-    # prime num_hashes has no (>=2, >=2) split
-    with pytest.raises(ValueError):
-        _resolve_minhash_geometry(0.9, 7, None)
-
-
-def test_lsh_geometry_one_param_is_coherent():
-    assert _resolve_lsh_geometry(0.9, 12, 6) == (12, 6)
-    assert _resolve_lsh_geometry(0.9, None, None, n=50_000) == lsh_plan(50_000, 0.9)
-    with pytest.raises(ValueError):
-        _resolve_lsh_geometry(0.9, None, None, n=None)
-    import math
-
-    p_bit = 1 - math.acos(0.9) / math.pi
-    # only rows: bands solved from the recall target at that r
-    b, r = _resolve_lsh_geometry(0.9, None, 8)
-    assert r == 8
-    assert 1 - (1 - p_bit ** r) ** b >= 0.99 or b == 128
-    # only bands: the largest r whose recall target fits in b bands
-    # (the code's criterion is the ln(1/miss)/p^r band requirement)
-    import math as _m
-
-    need = _m.log(1 / 0.01)
-    b2, r2 = _resolve_lsh_geometry(0.9, 64, None)
-    assert b2 == 64
-    assert 1 - (1 - p_bit ** r2) ** 64 >= 0.99
-    assert need / (p_bit ** (r2 + 1)) > 64
-    # a band count below the recall requirement floors r at 4
-    assert _resolve_lsh_geometry(0.9, 2, None) == (2, 4)
-
-
 def test_simhash_blocks_guard(spark):
     df = spark.range(4).select(
         F.col("id").alias("doc_id"), F.lit("hello world text").alias("text")
     )
-    with pytest.raises(ValueError, match="must be > max_hamming"):
-        simhash_near_dups(df, max_hamming=3, blocks=3)
     # n_docs threading skips the count and matches the counted plan
-    got = simhash_near_dups(df, max_hamming=3, blocks=None, n_docs=4).count()
+    got = simhash_near_dups(df, max_hamming=3, n_docs=4).count()
     assert got == simhash_near_dups(df, max_hamming=3).count()
 
 

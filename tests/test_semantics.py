@@ -38,6 +38,30 @@ def test_normalization():
     assert S.normalize_name(None) == ""
 
 
+_SINGULAR_FIXED_POINTS = {
+    "licenses": "license", "lenses": "lense", "classes": "class",
+    "statuses": "status", "status": "status", "analyses": "analysis",
+    "analysis": "analysis", "axes": "axis", "axis": "axis", "uses": "use",
+}
+
+
+def test_singularize_twice_changes_nothing():
+    for w, want in _SINGULAR_FIXED_POINTS.items():
+        assert S.normalize_name(w) == want
+        assert S.normalize_name(want) == want
+
+
+def test_column_normalize_name_matches_python(spark):
+    from pyspark.sql import functions as F
+
+    from ontology_learning_spark.functions import columns as C
+
+    words = list(_SINGULAR_FIXED_POINTS) + ["Switches", "chip antennas", "capacities", "bus", "abcses"]
+    rows = spark.createDataFrame([(w,) for w in words], "w string").select(
+        "w", C.normalize_name(F.col("w")).alias("n")).collect()
+    assert {r.w: r.n for r in rows} == {w: S.normalize_name(w) for w in words}
+
+
 def test_singular_plural_roundtrip():
     for w in ["resistor", "capacitor", "switch", "antenna", "cable", "battery"]:
         assert S.normalize_name(X.pluralize_token(w)) == w
